@@ -24,17 +24,12 @@ import org.apache.spark.sql.functions._
   * before-group is consulted only when `changed_cols` says the group
   * column itself changed (a group-moving update touches BOTH groups).
   *
-  * Replay mirrors JoinView.replay's micro-batch discipline: AQE off on a
-  * child session (caller conf untouched), batch-width shuffles, events
-  * pinned once, per-batch lazy localCheckpoint so plan depth stays O(1).
-  * The streaming face is `CdcStream.maintainTopKToParquet`, which calls
-  * [[applyBatch]] from `foreachBatch` with the state in swapped parquet
-  * generations.
+  * The view runs as a [[TableViews]] maintainer ([[maintainer]]): the
+  * shared replay and the streaming runner
+  * (`CdcStream.NamedTableView.topK`) merge the table state once per
+  * batch and fold every registered view off the same ctx.
   */
 object IncrementalTopK {
-
-  /** Maintained state: tombstone-aware base rows + the current view. */
-  final case class State(state: DataFrame, view: DataFrame)
 
   /** Per-group top-k by orderCol DESC, pk ASC as deterministic tiebreak.
     * `rk` is part of the VIEW's public schema (rank within group), so the
@@ -98,50 +93,11 @@ object IncrementalTopK {
       sel.schema), true)
   }
 
-  /** Delta's primary-key set as a driver-local LocalRelation, handed to
-    * Materializer.merge so its anti/semi key joins broadcast with no
-    * cluster-side build job per batch (JoinView.localKeys rationale).
-    * None above the cap — merge then derives the key set cluster-side
-    * and its unhinted joins degrade to shuffles instead of collecting an
-    * unbounded backlog's keys onto the driver. */
-  private def localKeys(delta: DataFrame, pk: Seq[String],
-                        cap: Int): Option[DataFrame] = {
-    val sel = delta.select(pk.map(c => col(s"after.$c").as(c)): _*).distinct()
-    val rows = sel.limit(cap + 1).collect().toSeq
-    if (rows.size > cap) None
-    else Some(delta.sparkSession.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sel.schema))
-  }
-
-  /** One micro-batch step: merge the delta into the tombstone-aware state
-    * and re-rank ONLY the touched groups. Runs in whatever session the
-    * input frames belong to; callers own pinning and conf discipline.
-    * `pre` optionally carries the batch's pre-collected (touched-group
-    * set, changed-key set) — [[replay]] prefetches them one window ahead
-    * so the two driver collects never sit on the per-batch critical
-    * path (JoinView.replay discipline). */
-  def applyBatch(st: State, delta: DataFrame, pk: Seq[String],
-                 groupCol: String, orderCol: String, k: Int,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys,
-                 pre: Option[((DataFrame, Boolean), Option[DataFrame])] =
-                   None): State = {
-    val nextState = Materializer.merge(st.state, delta, pk,
-        changedKeys =
-          pre.map(_._2).getOrElse(localKeys(delta, pk, maxLocalKeys)))
-      .localCheckpoint(false)
-    val ctx = TableViews.BatchCtx(delta, None, st.state, nextState,
-                                  pk, maxLocalKeys)
-    State(nextState,
-          stepView(st.view, ctx, groupCol, orderCol, k, pre.map(_._1))
-            .localCheckpoint(false))
-  }
-
-  /** The rank-specific half of a batch (shared between [[applyBatch]]
-    * and the [[TableViews]] fan-out via [[maintainer]]): re-rank ONLY
-    * the groups the delta touched, over the post-merge live state. */
+  /** The rank-specific half of a batch, folded off the shared
+    * [[TableViews.batchCtx]] (via [[maintainer]]): re-rank ONLY the
+    * groups the delta touched, over the post-merge live state. */
   private[cdc] def stepView(view: DataFrame, ctx: TableViews.BatchCtx,
-                            groupCol: String, orderCol: String, k: Int,
-                            preTg: Option[(DataFrame, Boolean)] = None)
+                            groupCol: String, orderCol: String, k: Int)
       : DataFrame = {
     // FROM-EMPTY (bootstrap) fold: every live group came from this
     // batch, so the touched-group collect and the anti/semi pair are
@@ -150,8 +106,7 @@ object IncrementalTopK {
     if (org.apache.spark.sql.graft.bridge.staticallyEmpty(view))
       return topK(Materializer.liveView(ctx.postState), ctx.pk, groupCol,
                   orderCol, k)
-    val (tg, tgLocal) = preTg.getOrElse(
-      touchedGroups(ctx.delta, groupCol, ctx.maxLocalKeys))
+    val (tg, tgLocal) = touchedGroups(ctx.delta, groupCol, ctx.maxLocalKeys)
     // null-safe group joins (mirroring Materializer.merge's key joins):
     // a decode failure can yield a NULL group, and a null-unsafe
     // anti/semi pair would park those rows in the view forever while
@@ -188,58 +143,4 @@ object IncrementalTopK {
       def reRoot(view: DataFrame, to: org.apache.spark.sql.SparkSession)
           : DataFrame = org.apache.spark.sql.graft.bridge.reRoot(view, to)
     }
-
-  /** Replay `events` across `cuts` maintaining the top-k view; returns
-    * the final view: groupCol ++ rk ++ image columns, rk in 1..k per
-    * group ordered by orderCol DESC with pk as the deterministic
-    * tiebreak. */
-  def replay(events: DataFrame, cuts: Seq[Long], pk: Seq[String],
-             groupCol: String, orderCol: String, k: Int,
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): DataFrame = {
-    val parent = events.sparkSession
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions",
-                   batchShufflePartitions.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyLike(df: DataFrame): DataFrame =
-      child.createDataFrame(
-        child.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-
-    val pinned = inChild(Materializer.pinnedEvents(events))
-      .coalesce(batchShufflePartitions)
-    val stateSchema = emptyLike(Materializer.compact(events.limit(0), pk))
-    val emptyView = emptyLike(
-      topK(stateSchema.drop(Materializer.MetaCols: _*),
-           pk, groupCol, orderCol, k))
-
-    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    // prefetch the NEXT window's driver collects (touched groups +
-    // changed keys) off the per-batch critical path — they depend only
-    // on the PINNED log, never on earlier batches (JoinView.replay
-    // rationale; look-ahead bounded to one window)
-    val prefetch = new Prefetch
-    def slice(lo: Long, hi: Long) =
-      pinned.filter(col("ts") > lo && col("ts") <= hi)
-    def collectsFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      val d = slice(lo, hi)
-      (prefetch.submit(touchedGroups(d, groupCol, maxLocalKeys)),
-       prefetch.submit(localKeys(d, pk, maxLocalKeys)))
-    }
-    var pending = collectsFor(0)
-    val fin = try bounds.indices.foldLeft(State(stateSchema, emptyView)) {
-      case (st, i) =>
-        val (lo, hi) = bounds(i)
-        val (tgF, ckF) = pending
-        if (i + 1 < bounds.size) pending = collectsFor(i + 1)
-        applyBatch(st, slice(lo, hi), pk, groupCol, orderCol, k,
-                   maxLocalKeys,
-                   pre = Some((prefetch.await(tgF), prefetch.await(ckF))))
-    } finally prefetch.shutdown()
-    org.apache.spark.sql.graft.bridge.reRoot(fin.view, parent)
-  }
 }

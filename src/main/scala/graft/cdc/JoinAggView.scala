@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * backlog degrades to cluster-side key handling instead of OOMing the
   * driver.
   *
-  * Exactness: pass `valueCast = _.cast("decimal(p,s)")` — the
+  * Exactness: give each measure a `_.cast("decimal(p,s)")` — the
   * retract/insert fold is order-sensitive in IEEE double (`(s + x) − x`
   * leaves residue), and a decimal state makes the maintained sums equal a
   * direct recompute bit-for-bit. NULL discipline matches SQL aggregates:
@@ -72,66 +72,13 @@ object JoinAggView {
           when(col(s"n_vals_$c") > 0, col(s"sum_$c")).as(s"sum_$c"))): _*)
   }
 
-  /** Single-measure [[viewMulti]]. */
-  def view(st: State, valueCol: String): DataFrame =
-    viewMulti(st, Seq(valueCol))
-
-  /** One micro-batch step. `groupCols` name the aggregate's group
-    * attributes (from live(L) ++ live(R) columns); `valueCol` is summed.
-    * Same delta contract as [[JoinView.applyBatch]]: `dl`/`dr` must be
-    * cheap to re-scan (pinned or materialized) — each feeds a merge and a
-    * changed-key derivation. */
-  def applyBatch(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 groupCols: Seq[String], valueCol: String,
-                 valueCast: Column => Column = identity,
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State =
-    applyBatchMulti(st, dl, dr, lPk, rPk, lJoinCols, groupCols,
-                    Seq(valueCol -> valueCast), keys, maxLocalKeys)
-
-  /** Multi-measure [[applyBatch]]: each `(col, cast)` measure gets its
-    * own exact sum (and NULL-discipline counter) maintained in the same
-    * single delta pass — measures may come from EITHER join side. */
-  def applyBatchMulti(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 groupCols: Seq[String],
-                 measures: Seq[(String, Column => Column)],
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State =
-    applyBatchNamed(st, dl, dr, lPk, rPk, lJoinCols, groupCols,
-                    measures.map { case (c, f) => (c, c, f) }, keys,
-                    maxLocalKeys)
-
-  /** [[applyBatchMulti]] with DISTINCT output names per measure —
-    * `(outName, srcCol, cast)` — so one source column can carry several
-    * measures (e.g. the value AND its square, which makes AVG/VARIANCE
-    * over the join maintainable from the same delta pass). */
-  def applyBatchNamed(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 groupCols: Seq[String],
-                 measures: Seq[(String, String, Column => Column)],
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    require(measures.nonEmpty, "at least one measure")
-    require(measures.map(_._1).distinct.size == measures.size,
-      "measure output names must be distinct")
-    require(rPk.size == lJoinCols.size,
-      s"lJoinCols (${lJoinCols.mkString(",")}) must match rPk " +
-        s"(${rPk.mkString(",")}) positionally")
-    require(lJoinCols.intersect(rPk).isEmpty,
-      s"lJoinCols and rPk must not share column names " +
-        s"(got ${lJoinCols.intersect(rPk).mkString(",")}); rename one side")
-    val (ctx, lNext, rNext) = MultiView.batchCtx(st.left, st.right, dl, dr,
-      lPk, rPk, lJoinCols, keys, maxLocalKeys)
-    State(lNext, rNext, stepAgg(st.agg, ctx, groupCols, measures))
-  }
-
-  /** The aggregate-specific half of a batch (shared verbatim between
-    * [[applyBatchNamed]] and the [[MultiView]] fan-out via
-    * [[maintainerNamed]]): retract touched join rows from the PRE-merge
-    * live states, insert from the POST-merge ones, fold the per-group
-    * deltas into the O(|groups|) aggregate state. */
+  /** The aggregate-specific half of a batch, folded off the shared
+    * [[MultiView.batchCtx]] via [[maintainerNamed]]: retract touched join
+    * rows from the PRE-merge live states, insert from the POST-merge
+    * ones, fold the per-group deltas into the O(|groups|) aggregate
+    * state. `measures` are `(outName, srcCol, cast)` — several measures
+    * (even from both join sides, or one column twice: the value AND its
+    * square make AVG/VARIANCE maintainable) share one delta pass. */
   private[cdc] def stepAgg(agg: DataFrame, ctx: MultiView.BatchCtx,
                  groupCols: Seq[String],
                  measures: Seq[(String, String, Column => Column)])
@@ -251,11 +198,11 @@ object JoinAggView {
     }
   }
 
-  /** The two-branch delta restriction (JoinView.applyBatch rationale:
+  /** The two-branch delta restriction (JoinView.stepView rationale:
     * each branch's semi side is |Δ|-bounded and broadcast, so neither
     * full state is ever exchanged), evaluated over a given (liveL, liveR)
     * pair with weight `w`. Package-private so the plan-shape spec can
-    * assert the broadcasts on the UN-pinned frame (applyBatch pins the
+    * assert the broadcasts on the UN-pinned frame (stepAgg pins the
     * derived delta agg, which hides this subtree from its plan). */
   private[cdc] def touchedJoinRows(liveL: DataFrame, liveR: DataFrame,
       changedL: DataFrame, lLocal: Boolean,
@@ -283,23 +230,8 @@ object JoinAggView {
 
   /** The canonical aggregate-state frame computed DIRECTLY from a pair of
     * live states — the recompute the incremental path must equal, and the
-    * schema seed for [[replay]]'s empty initial state. */
-  def directAgg(liveL: DataFrame, liveR: DataFrame,
-                rPk: Seq[String], lJoinCols: Seq[String],
-                groupCols: Seq[String], valueCol: String,
-                valueCast: Column => Column = identity): DataFrame =
-    directAggMulti(liveL, liveR, rPk, lJoinCols, groupCols,
-                   Seq(valueCol -> valueCast))
-
-  /** Multi-measure [[directAgg]]. */
-  def directAggMulti(liveL: DataFrame, liveR: DataFrame,
-                rPk: Seq[String], lJoinCols: Seq[String],
-                groupCols: Seq[String],
-                measures: Seq[(String, Column => Column)]): DataFrame =
-    directAggNamed(liveL, liveR, rPk, lJoinCols, groupCols,
-                   measures.map { case (c, f) => (c, c, f) })
-
-  /** [[directAggMulti]] with `(outName, srcCol, cast)` measures. */
+    * schema seed for the maintainer's empty state. `measures` are
+    * `(outName, srcCol, cast)`. */
   def directAggNamed(liveL: DataFrame, liveR: DataFrame,
                 rPk: Seq[String], lJoinCols: Seq[String],
                 groupCols: Seq[String],
@@ -311,94 +243,5 @@ object JoinAggView {
     liveL.join(liveR, joinCond)
       .groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
-  }
-
-  /** Replay two event streams through the aggregate view in time-ordered
-    * windows (same cuts/micro-batch discipline as [[JoinView.replay]]:
-    * child session, AQE off, batch-width shuffles, logs pinned once,
-    * per-batch lazy pins). Returns the final state. */
-  def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             groupCols: Seq[String], valueCol: String,
-             valueCast: Column => Column = identity,
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State =
-    replayMulti(lEvents, rEvents, cuts, lPk, rPk, lJoinCols, groupCols,
-                Seq(valueCol -> valueCast), batchShufflePartitions,
-                maxLocalKeys)
-
-  /** Multi-measure [[replay]]. */
-  def replayMulti(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             groupCols: Seq[String],
-             measures: Seq[(String, Column => Column)],
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State =
-    replayNamed(lEvents, rEvents, cuts, lPk, rPk, lJoinCols, groupCols,
-                measures.map { case (c, f) => (c, c, f) },
-                batchShufflePartitions, maxLocalKeys)
-
-  /** [[replayMulti]] with `(outName, srcCol, cast)` measures. */
-  def replayNamed(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             groupCols: Seq[String],
-             measures: Seq[(String, String, Column => Column)],
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    val parent = lEvents.sparkSession
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions",
-                   batchShufflePartitions.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyLike(df: DataFrame): DataFrame =
-      child.createDataFrame(
-        child.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    val lSchema = emptyLike(Materializer.compact(lEvents.limit(0), lPk))
-    val rSchema = emptyLike(Materializer.compact(rEvents.limit(0), rPk))
-    // seed the agg state with the DIRECT recompute's schema over empty
-    // states — applyBatch's merged output is cast to the same fixed point
-    val emptyAgg = emptyLike(directAggNamed(
-      lSchema.drop(Materializer.MetaCols: _*),
-      rSchema.drop(Materializer.MetaCols: _*),
-      rPk, lJoinCols, groupCols, measures))
-    val lPinned = inChild(Materializer.pinnedEvents(lEvents))
-      .coalesce(batchShufflePartitions)
-    val rPinned = inChild(Materializer.pinnedEvents(rEvents))
-      .coalesce(batchShufflePartitions)
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    // prefetch the NEXT window's changed-key collects off the per-batch
-    // critical path (JoinView.replay rationale: a window's key sets
-    // depend only on the PINNED logs, never on earlier batches;
-    // look-ahead bounded to one window)
-    val prefetch = new Prefetch
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      (prefetch.submit(
-         JoinView.localKeys(slice(lPinned, lo, hi), lPk, maxLocalKeys)),
-       prefetch.submit(
-         JoinView.localKeys(slice(rPinned, lo, hi), rPk, maxLocalKeys)))
-    }
-    var pending = keysFor(0)
-    val fin = try bounds.indices.foldLeft(State(lSchema, rSchema, emptyAgg)) {
-      case (st, i) =>
-        val (lo, hi) = bounds(i)
-        val (ckLF, ckRF) = pending
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val next = applyBatchNamed(st, slice(lPinned, lo, hi),
-                              slice(rPinned, lo, hi),
-                              lPk, rPk, lJoinCols, groupCols, measures,
-                              keys = Some((prefetch.await(ckLF),
-                                           prefetch.await(ckRF))),
-                              maxLocalKeys = maxLocalKeys)
-        next.copy(agg = next.agg.localCheckpoint(false))
-    } finally prefetch.shutdown()
-    import org.apache.spark.sql.graft.bridge.reRoot
-    State(reRoot(fin.left, parent), reRoot(fin.right, parent),
-          reRoot(fin.agg, parent))
   }
 }

@@ -49,23 +49,9 @@ object JoinDistinctView {
       IncrementalAgg.DistinctState(st.pairs, st.groups), groupCol, valueCol,
       ps)
 
-  /** One micro-batch step — JoinAggView's delta-join restriction, folded
-    * into the additive pair state. Same delta contract: `dl`/`dr` must be
-    * cheap to re-scan. */
-  def applyBatch(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 groupCol: String, valueCol: String,
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    val (ctx, lNext, rNext) = MultiView.batchCtx(st.left, st.right, dl, dr,
-      lPk, rPk, lJoinCols, keys, maxLocalKeys)
-    val (pairs, groups) = stepPairs(st.pairs, st.groups, ctx,
-                                    groupCol, valueCol)
-    State(lNext, rNext, pairs, groups)
-  }
-
-  /** The pair-state-specific half of a batch (shared verbatim between
-    * [[applyBatch]] and the [[MultiView]] fan-out via [[maintainer]]). */
+  /** The pair-state-specific half of a batch — JoinAggView's delta-join
+    * restriction, folded into the additive pair state off the shared
+    * [[MultiView.batchCtx]] (via [[maintainer]]). */
   private[cdc] def stepPairs(pairs: DataFrame, groups: DataFrame,
                              ctx: MultiView.BatchCtx,
                              groupCol: String, valueCol: String)
@@ -156,74 +142,4 @@ object JoinDistinctView {
         (b.reRoot(st._1, to), b.reRoot(st._2, to))
       }
     }
-
-  /** Replay two event streams across `cuts` (JoinView.replay micro-batch
-    * discipline: child session, AQE off, pinned logs, lazy per-batch
-    * pins); returns the final state. */
-  def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             groupCol: String, valueCol: String,
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    val parent = lEvents.sparkSession
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions",
-                   batchShufflePartitions.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyLike(df: DataFrame): DataFrame =
-      child.createDataFrame(
-        child.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    val lSchema = emptyLike(Materializer.compact(lEvents.limit(0), lPk))
-    val rSchema = emptyLike(Materializer.compact(rEvents.limit(0), rPk))
-    val joinCond = lJoinCols.zip(rPk)
-      .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-    val rows0 = lSchema.drop(Materializer.MetaCols: _*)
-      .join(rSchema.drop(Materializer.MetaCols: _*), joinCond)
-      .select(col(groupCol).as("g"), col(valueCol).as("v"),
-              lit(1L).as("w"))
-    val emptyPairs = emptyLike(
-      rows0.groupBy(col("g"), col("v")).agg(sum(col("w")).as("net")))
-    val emptyGroups = emptyLike(
-      rows0.groupBy(col("g")).agg(sum(col("w")).as("n_rows")))
-    val lPinned = inChild(Materializer.pinnedEvents(lEvents))
-      .coalesce(batchShufflePartitions)
-    val rPinned = inChild(Materializer.pinnedEvents(rEvents))
-      .coalesce(batchShufflePartitions)
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    // prefetch the NEXT window's changed-key collects off the per-batch
-    // critical path (JoinView.replay rationale: a window's key sets
-    // depend only on the PINNED logs, never on earlier batches)
-    val prefetch = new Prefetch
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      (prefetch.submit(
-         JoinView.localKeys(slice(lPinned, lo, hi), lPk, maxLocalKeys)),
-       prefetch.submit(
-         JoinView.localKeys(slice(rPinned, lo, hi), rPk, maxLocalKeys)))
-    }
-    var pending = keysFor(0)
-    val fin = try bounds.indices.foldLeft(
-        State(lSchema, rSchema, emptyPairs, emptyGroups)) {
-      case (st, i) =>
-        val (lo, hi) = bounds(i)
-        val (ckLF, ckRF) = pending
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val next = applyBatch(st, slice(lPinned, lo, hi),
-                              slice(rPinned, lo, hi),
-                              lPk, rPk, lJoinCols, groupCol, valueCol,
-                              keys = Some((prefetch.await(ckLF),
-                                           prefetch.await(ckRF))),
-                              maxLocalKeys = maxLocalKeys)
-        next.copy(pairs = next.pairs.localCheckpoint(false),
-                  groups = next.groups.localCheckpoint(false))
-    } finally prefetch.shutdown()
-    import org.apache.spark.sql.graft.bridge.reRoot
-    State(reRoot(fin.left, parent), reRoot(fin.right, parent),
-          reRoot(fin.pairs, parent), reRoot(fin.groups, parent))
-  }
 }

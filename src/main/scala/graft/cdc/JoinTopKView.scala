@@ -20,31 +20,13 @@ import org.apache.spark.sql.functions._
   * reshuffled whole. */
 object JoinTopKView {
 
-  /** Maintained join state/view + the current per-group rank view
-    * (`viewCols… , rk`). */
-  final case class State(join: JoinView.State, ranked: DataFrame)
-
-  /** One micro-batch step. `viewCols` is the join-view projection (must
-    * include `lPk`, `lJoinCols`, `groupCol`, `orderCol`); ranks are
-    * `orderCol DESC, lPk ASC` within `groupCol`, top `k` kept. */
-  def applyBatch(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 viewCols: Seq[String], groupCol: String, orderCol: String,
-                 k: Int,
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    val (ctx, lNext, rNext) = MultiView.batchCtx(st.join.left, st.join.right,
-      dl, dr, lPk, rPk, lJoinCols, keys, maxLocalKeys)
-    val (viewNext, ranked) = stepRanked(st.join.view, st.ranked, ctx,
-                                        viewCols, groupCol, orderCol, k)
-    State(JoinView.State(lNext, rNext, viewNext), ranked)
-  }
-
-  /** The rank-specific half of a batch (shared verbatim between
-    * [[applyBatch]] and the [[MultiView]] fan-out via [[maintainer]]):
-    * advance the join view one step, then re-rank ONLY the touched
-    * groups. Returns (viewNext — pinned, it is scanned by the group
-    * derivation AND the re-rank —, rankedNext). */
+  /** The rank-specific half of a batch, folded off the shared
+    * [[MultiView.batchCtx]] (via [[maintainer]]): advance the join view
+    * one step, then re-rank ONLY the touched groups. `viewCols` is the
+    * join-view projection (must include `lPk`, `lJoinCols`, `groupCol`,
+    * `orderCol`); ranks are `orderCol DESC, lPk ASC` within `groupCol`,
+    * top `k` kept. Returns (viewNext — pinned, it is scanned by the
+    * group derivation AND the re-rank —, rankedNext). */
   private[cdc] def stepRanked(view: DataFrame, ranked: DataFrame,
                               ctx: MultiView.BatchCtx, viewCols: Seq[String],
                               groupCol: String, orderCol: String, k: Int)
@@ -108,6 +90,7 @@ object JoinTopKView {
       def empty(liveL0: DataFrame, liveR0: DataFrame, lPk: Seq[String],
                 rPk: Seq[String], lJoinCols: Seq[String])
           : (DataFrame, DataFrame) = {
+        MultiView.requireViewCols(viewCols, lPk, lJoinCols)
         val v = MultiView.emptyLike(
           liveL0.join(liveR0,
               lJoinCols.zip(rPk).map { case (l, r) => col(l) === col(r) }
@@ -128,73 +111,4 @@ object JoinTopKView {
         (b.reRoot(st._1, to), b.reRoot(st._2, to))
       }
     }
-
-  /** Replay two event streams across `cuts` (JoinView.replay micro-batch
-    * discipline); returns the final state. */
-  def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             viewCols: Seq[String], groupCol: String, orderCol: String,
-             k: Int,
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    val parent = lEvents.sparkSession
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions",
-                   batchShufflePartitions.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyLike(df: DataFrame): DataFrame =
-      child.createDataFrame(
-        child.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    val lSchema = emptyLike(Materializer.compact(lEvents.limit(0), lPk))
-    val rSchema = emptyLike(Materializer.compact(rEvents.limit(0), rPk))
-    val joinCond = lJoinCols.zip(rPk)
-      .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-    val emptyView = emptyLike(
-      lSchema.drop(Materializer.MetaCols: _*)
-        .join(rSchema.drop(Materializer.MetaCols: _*), joinCond)
-        .select(viewCols.map(col): _*))
-    val emptyRanked = emptyLike(
-      IncrementalTopK.topK(emptyView, lPk, groupCol, orderCol, k))
-    val lPinned = inChild(Materializer.pinnedEvents(lEvents))
-      .coalesce(batchShufflePartitions)
-    val rPinned = inChild(Materializer.pinnedEvents(rEvents))
-      .coalesce(batchShufflePartitions)
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    // prefetch the NEXT window's changed-key collects off the per-batch
-    // critical path (JoinView.replay rationale)
-    val prefetch = new Prefetch
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      (prefetch.submit(
-         JoinView.localKeys(slice(lPinned, lo, hi), lPk, maxLocalKeys)),
-       prefetch.submit(
-         JoinView.localKeys(slice(rPinned, lo, hi), rPk, maxLocalKeys)))
-    }
-    var pending = keysFor(0)
-    val fin = try bounds.indices.foldLeft(
-        State(JoinView.State(lSchema, rSchema, emptyView), emptyRanked)) {
-      case (st, i) =>
-        val (lo, hi) = bounds(i)
-        val (ckLF, ckRF) = pending
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val next = applyBatch(st, slice(lPinned, lo, hi),
-                              slice(rPinned, lo, hi),
-                              lPk, rPk, lJoinCols, viewCols, groupCol,
-                              orderCol, k,
-                              keys = Some((prefetch.await(ckLF),
-                                           prefetch.await(ckRF))),
-                              maxLocalKeys = maxLocalKeys)
-        next.copy(ranked = next.ranked.localCheckpoint(false))
-    } finally prefetch.shutdown()
-    import org.apache.spark.sql.graft.bridge.reRoot
-    State(JoinView.State(reRoot(fin.join.left, parent),
-                         reRoot(fin.join.right, parent),
-                         reRoot(fin.join.view, parent)),
-          reRoot(fin.ranked, parent))
-  }
 }

@@ -44,9 +44,6 @@ import org.apache.spark.sql.functions._
   * through the same joins positionally. */
 object JoinView {
 
-  /** Tombstone-aware L/R states + the current view rows. */
-  final case class State(left: DataFrame, right: DataFrame, view: DataFrame)
-
   /** Ceiling on the per-batch changed-key count collected to the driver
     * as a LocalRelation. A steady-state micro-batch is far below it; an
     * AvailableNow catch-up batch draining a giant backlog is exactly the
@@ -79,53 +76,15 @@ object JoinView {
       scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sel.schema))
   }
 
-  /** One micro-batch step. `viewCols` is the view projection (column
-    * names from live(L) ++ live(R); must include `lPk` and `lJoinCols`).
-    * `lJoinCols` is L's foreign key into R's primary key `rPk`, matched
-    * positionally (`lJoinCols(i)` references `rPk(i)`). `keys` optionally
-    * carries the pre-collected (changedL, changedR) key sets (see
-    * [[localKeys]] — each side is `Some(localRelation)` when under the
-    * cap, `None` when the batch blew it); when absent they are derived
-    * from the deltas under `maxLocalKeys`. A `None` side runs the
-    * DISTRIBUTED fallback: cluster-side distinct key set, no broadcast
-    * hints — per-batch cost degrades gracefully to a shuffle join
-    * instead of collecting an unbounded key set onto the driver. */
-  def applyBatch(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 viewCols: Seq[String],
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = DefaultMaxLocalKeys): State = {
-    require(rPk.size == lJoinCols.size,
-      s"lJoinCols (${lJoinCols.mkString(",")}) must match rPk " +
-        s"(${rPk.mkString(",")}) positionally")
-    // overlapping names would make the rebuild joins and the view
-    // projection ambiguous (two same-named columns in scope with
-    // different values) — fail loudly here instead of corrupting there
-    require(lJoinCols.intersect(rPk).isEmpty,
-      s"lJoinCols and rPk must not share column names " +
-        s"(got ${lJoinCols.intersect(rPk).mkString(",")}); rename one side")
-    // Contract: `dl`/`dr` must be cheap to re-scan (a materialized
-    // foreachBatch Dataset, or a filter over a pinned log as in [[replay]])
-    // — they are referenced by the merge, the changed-key sets, and three
-    // broadcasts, so a delta carrying an expensive lineage would re-run it
-    // per use.
-    //
-    // States are pinned with LAZY local checkpoints (inside batchCtx):
-    // downstream plans see a flat scan (plan depth and driver planning
-    // cost stay bounded no matter how many batches chain), each state's
-    // RDD is persisted on first compute (it is scanned by several later
-    // joins), and NO job runs here — the whole replay materializes as one
-    // DAG at the first action, where independent per-batch stages
-    // parallelize on the scheduler itself rather than via driver-side
-    // futures.
-    val (ctx, lNext, rNext) = MultiView.batchCtx(st.left, st.right, dl, dr,
-      lPk, rPk, lJoinCols, keys, maxLocalKeys)
-    State(lNext, rNext, stepView(st.view, ctx, viewCols))
-  }
-
   /** The view-specific half of a batch: retract touched view rows, rebuild
-    * them from the post-merge live states. Shared verbatim between
-    * [[applyBatch]] and the [[MultiView]] fan-out ([[maintainer]]).
+    * them from the post-merge live states (the L/R merges and the
+    * changed-key sets are the shared [[MultiView.batchCtx]]). `viewCols`
+    * is the view projection (column names from live(L) ++ live(R); must
+    * include `lPk` and `lJoinCols`). An over-cap side of the ctx (the
+    * batch blew `maxLocalKeys`) runs the DISTRIBUTED fallback:
+    * cluster-side distinct key set, no broadcast hints — per-batch cost
+    * degrades gracefully to a shuffle join instead of collecting an
+    * unbounded key set onto the driver.
     *
     * Each rebuild join has a |Δ|-bounded side — the semi-join against the
     * broadcast changed-key set leaves at most one row per delta key — so
@@ -138,11 +97,12 @@ object JoinView {
     * and the same cap: an over-cap side loses its hints along with its
     * LocalRelation, so a giant backfill batch plans as ordinary
     * distributed joins (callers wanting delta-bounded latency should
-    * still split backlogs, as [[replay]] does with cuts).
+    * still split backlogs, as the replays and runners do with cuts).
     *
     * The view is returned un-pinned: view_b is referenced exactly once —
-    * by batch b+1's keep branch — and the replay loops lazily checkpoint
-    * it per batch to bound plan depth without scheduling a job. */
+    * by batch b+1's keep branch — and the loops lazily checkpoint it per
+    * batch (the maintainer's `pin`) to bound plan depth without
+    * scheduling a job. */
   private[cdc] def stepView(view: DataFrame, ctx: MultiView.BatchCtx,
                             viewCols: Seq[String]): DataFrame = {
     import ctx.{changedL, changedR, lLocal, rLocal, lPk, rPk, liveL, liveR,
@@ -178,121 +138,18 @@ object JoinView {
   def maintainer(viewCols: Seq[String]): MultiView.Maintainer[DataFrame] =
     new MultiView.Maintainer[DataFrame] {
       def empty(liveL0: DataFrame, liveR0: DataFrame, lPk: Seq[String],
-                rPk: Seq[String], lJoinCols: Seq[String]): DataFrame =
+                rPk: Seq[String], lJoinCols: Seq[String]): DataFrame = {
+        MultiView.requireViewCols(viewCols, lPk, lJoinCols)
         MultiView.emptyLike(
           liveL0.join(liveR0,
               lJoinCols.zip(rPk).map { case (l, r) => col(l) === col(r) }
                 .reduce(_ && _))
             .select(viewCols.map(col): _*))
+      }
       def step(view: DataFrame, ctx: MultiView.BatchCtx): DataFrame =
         stepView(view, ctx, viewCols)
       def pin(view: DataFrame): DataFrame = view.localCheckpoint(false)
       def reRoot(view: DataFrame, to: org.apache.spark.sql.SparkSession)
           : DataFrame = org.apache.spark.sql.graft.bridge.reRoot(view, to)
     }
-
-  /** Replay two event streams through the view in time-ordered windows:
-    * `cuts = Seq(t1, t2, ...)` splits events into batches
-    * `ts <= t1`, `t1 < ts <= t2`, ..., `ts > tn`. Returns the final
-    * state after all batches.
-    *
-    * `batchShufflePartitions` sizes the per-batch exchanges: they are
-    * |Δ|-bounded (the only shuffle per merge is the compact over touched
-    * keys), so the session-wide shuffle width — sized for corpus-scale
-    * scans — wastes scheduling overhead here. AQE's partition coalescing
-    * would do this adaptively, but AQE is off in the loop by design;
-    * raise the value for giant backfill batches. */
-  def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             viewCols: Seq[String],
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = DefaultMaxLocalKeys): State = {
-    // AQE off for the replay loop, mirroring Structured Streaming's own
-    // behavior (micro-batch plans are not adaptively re-planned): each
-    // batch here is a small, known-shape plan over pinned inputs, and
-    // AQE's stage-by-stage materialization only adds per-batch latency —
-    // measured ~25% wall on this loop. The override lives on a CHILD
-    // session (`newSession()`: shared SparkContext + catalog, independent
-    // SQL conf) so the caller's session conf is never mutated — toggling
-    // the shared conf raced with concurrent queries (a batch query
-    // running mid-replay silently lost AQE) and two concurrent replays
-    // could clobber each other's saved value.
-    val parent = lEvents.sparkSession
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions",
-                   batchShufflePartitions.toString)
-    // Re-root a pinned frame in the child so every derived plan is
-    // analyzed and executed under the child's conf (zero-copy: InternalRow
-    // RDD scan, no external-Row round trip per downstream consumer).
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    // Seed with truly-empty LocalRelations: limit(0) over the event
-    // streams would carry the whole decode lineage into batch-1 analysis
-    // (driver planning cost, repeated per derived frame). Only the SCHEMA
-    // of the heavy plans is consulted; the data lineage starts empty.
-    def emptyLike(df: DataFrame): DataFrame =
-      child.createDataFrame(child.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                            df.schema)
-    val lSchema = emptyLike(Materializer.compact(lEvents.limit(0), lPk))
-    val rSchema = emptyLike(Materializer.compact(rEvents.limit(0), rPk))
-    val emptyView = emptyLike(
-      lSchema.drop(Materializer.MetaCols: _*)
-        .join(rSchema.drop(Materializer.MetaCols: _*),
-              lJoinCols.zip(rPk).map { case (l, r) => col(l) === col(r) }
-                .reduce(_ && _))
-        .select(viewCols.map(col): _*))
-    // Pin the decoded logs ONCE (under the parent — their decode lineage
-    // is regular batch work); each batch slice is then a cheap filter over
-    // the pinned RDD (satisfying applyBatch's delta contract) instead of a
-    // fresh envelope-decode lineage per batch per use.
-    // coalesce the pinned logs to the batch shuffle width: every batch
-    // slices them several times, and a slice scan at the session-wide
-    // partition count costs a full-width task wave per use
-    val lPinned = inChild(Materializer.pinnedEvents(lEvents))
-      .coalesce(batchShufflePartitions)
-    val rPinned = inChild(Materializer.pinnedEvents(rEvents))
-      .coalesce(batchShufflePartitions)
-    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
-    // A window's changed-key collect depends only on the PINNED logs, not
-    // on earlier batches — prefetch the NEXT window's collects while the
-    // current batch is assembled, so key-collect jobs never sit on the
-    // per-batch critical path. Look-ahead is bounded to one window: an
-    // eager all-windows wave would fire 2N concurrent collect jobs and
-    // hold every window's key set in driver memory at once on long
-    // replays.
-    val prefetch = new Prefetch
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      (prefetch.submit(localKeys(slice(lPinned, lo, hi), lPk, maxLocalKeys)),
-       prefetch.submit(localKeys(slice(rPinned, lo, hi), rPk, maxLocalKeys)))
-    }
-    var pending = keysFor(0)
-    val fin = try bounds.indices
-      .foldLeft(State(lSchema, rSchema, emptyView)) { case (st, i) =>
-        val (lo, hi) = bounds(i)
-        val (ckLF, ckRF) = pending
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val next = applyBatch(st, slice(lPinned, lo, hi),
-                              slice(rPinned, lo, hi),
-                              lPk, rPk, lJoinCols, viewCols,
-                              keys = Some((prefetch.await(ckLF),
-                                           prefetch.await(ckRF))),
-                              maxLocalKeys = maxLocalKeys)
-        // pin the view per batch, lazily, for the same reason as the
-        // states in applyBatch: plan depth stays O(1) per batch with no
-        // job until the caller's first action
-        next.copy(view = next.view.localCheckpoint(false))
-      } finally prefetch.shutdown()
-    // Hand results back rooted in the caller's session: states are pinned
-    // (re-root is free); the lazy view plan is physically planned under
-    // the child (micro-batch semantics, AQE off) and wrapped as an RDD
-    // scan, so downstream composition runs under the caller's own conf.
-    import org.apache.spark.sql.graft.bridge.reRoot
-    State(reRoot(fin.left, parent), reRoot(fin.right, parent),
-          reRoot(fin.view, parent))
-  }
 }

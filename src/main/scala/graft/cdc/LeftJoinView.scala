@@ -37,12 +37,9 @@ import org.apache.spark.sql.functions._
   * in [[JoinView]]. */
 object LeftJoinView {
 
-  /** Tombstone-aware L/R states + the current view rows. */
-  final case class State(left: DataFrame, right: DataFrame, view: DataFrame)
-
   /** The canonical recompute the incremental path must equal: live(L) ⟕
     * live(R) projected to `viewCols` (R-side columns NULL when
-    * unmatched). Also the schema seed for [[replay]]'s empty view. */
+    * unmatched). Also the schema seed for the maintainer's empty view. */
   def directView(liveL: DataFrame, liveR: DataFrame,
                  rPk: Seq[String], lJoinCols: Seq[String],
                  viewCols: Seq[String]): DataFrame = {
@@ -52,28 +49,10 @@ object LeftJoinView {
       .select(viewCols.map(col): _*)
   }
 
-  /** One micro-batch step. Same contract as [[JoinView.applyBatch]]:
-    * `viewCols` must include `lPk` and `lJoinCols`; `dl`/`dr` must be
-    * cheap to re-scan; `keys` optionally carries pre-collected key sets
-    * (None side = over-cap, distributed fallback). */
-  def applyBatch(st: State, dl: DataFrame, dr: DataFrame,
-                 lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-                 viewCols: Seq[String],
-                 keys: Option[(Option[DataFrame], Option[DataFrame])] = None,
-                 maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    require(rPk.size == lJoinCols.size,
-      s"lJoinCols (${lJoinCols.mkString(",")}) must match rPk " +
-        s"(${rPk.mkString(",")}) positionally")
-    require(lJoinCols.intersect(rPk).isEmpty,
-      s"lJoinCols and rPk must not share column names " +
-        s"(got ${lJoinCols.intersect(rPk).mkString(",")}); rename one side")
-    val (ctx, lNext, rNext) = MultiView.batchCtx(st.left, st.right, dl, dr,
-      lPk, rPk, lJoinCols, keys, maxLocalKeys)
-    State(lNext, rNext, stepView(st.view, ctx, viewCols))
-  }
-
-  /** The view-specific half of a batch (shared verbatim between
-    * [[applyBatch]] and the [[MultiView]] fan-out via [[maintainer]]). */
+  /** The view-specific half of a batch, folded off the shared
+    * [[MultiView.batchCtx]] ([[JoinView.stepView]]'s contract: `viewCols`
+    * must include `lPk` and `lJoinCols`; an over-cap ctx side runs the
+    * distributed fallback). */
   private[cdc] def stepView(view: DataFrame, ctx: MultiView.BatchCtx,
                             viewCols: Seq[String]): DataFrame = {
     import ctx.{changedL, lLocal, rLocal, lPk, liveL, liveR, hinted}
@@ -139,72 +118,15 @@ object LeftJoinView {
   def maintainer(viewCols: Seq[String]): MultiView.Maintainer[DataFrame] =
     new MultiView.Maintainer[DataFrame] {
       def empty(liveL0: DataFrame, liveR0: DataFrame, lPk: Seq[String],
-                rPk: Seq[String], lJoinCols: Seq[String]): DataFrame =
+                rPk: Seq[String], lJoinCols: Seq[String]): DataFrame = {
+        MultiView.requireViewCols(viewCols, lPk, lJoinCols)
         MultiView.emptyLike(
           directView(liveL0, liveR0, rPk, lJoinCols, viewCols))
+      }
       def step(view: DataFrame, ctx: MultiView.BatchCtx): DataFrame =
         stepView(view, ctx, viewCols)
       def pin(view: DataFrame): DataFrame = view.localCheckpoint(false)
       def reRoot(view: DataFrame, to: org.apache.spark.sql.SparkSession)
           : DataFrame = org.apache.spark.sql.graft.bridge.reRoot(view, to)
     }
-
-  /** Replay two event streams across `cuts` ([[JoinView.replay]]'s
-    * micro-batch discipline: child session, AQE off, batch-width
-    * shuffles, pinned logs, prefetched key collects). */
-  def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
-             lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-             viewCols: Seq[String],
-             batchShufflePartitions: Int = 8,
-             maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys): State = {
-    val parent = lEvents.sparkSession
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions",
-                   batchShufflePartitions.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyLike(df: DataFrame): DataFrame =
-      child.createDataFrame(
-        child.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    val lSchema = emptyLike(Materializer.compact(lEvents.limit(0), lPk))
-    val rSchema = emptyLike(Materializer.compact(rEvents.limit(0), rPk))
-    val emptyView = emptyLike(directView(
-      lSchema.drop(Materializer.MetaCols: _*),
-      rSchema.drop(Materializer.MetaCols: _*),
-      rPk, lJoinCols, viewCols))
-    val lPinned = inChild(Materializer.pinnedEvents(lEvents))
-      .coalesce(batchShufflePartitions)
-    val rPinned = inChild(Materializer.pinnedEvents(rEvents))
-      .coalesce(batchShufflePartitions)
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    val prefetch = new Prefetch
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      (prefetch.submit(
-         JoinView.localKeys(slice(lPinned, lo, hi), lPk, maxLocalKeys)),
-       prefetch.submit(
-         JoinView.localKeys(slice(rPinned, lo, hi), rPk, maxLocalKeys)))
-    }
-    var pending = keysFor(0)
-    val fin = try bounds.indices
-      .foldLeft(State(lSchema, rSchema, emptyView)) { case (st, i) =>
-        val (lo, hi) = bounds(i)
-        val (ckLF, ckRF) = pending
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val next = applyBatch(st, slice(lPinned, lo, hi),
-                              slice(rPinned, lo, hi),
-                              lPk, rPk, lJoinCols, viewCols,
-                              keys = Some((prefetch.await(ckLF),
-                                           prefetch.await(ckRF))),
-                              maxLocalKeys = maxLocalKeys)
-        next.copy(view = next.view.localCheckpoint(false))
-      } finally prefetch.shutdown()
-    import org.apache.spark.sql.graft.bridge.reRoot
-    State(reRoot(fin.left, parent), reRoot(fin.right, parent),
-          reRoot(fin.view, parent))
-  }
 }

@@ -41,7 +41,7 @@ object MultiView {
       if (isLocal) broadcast(df) else df
 
     /** The changed-R key set re-keyed to L's foreign-key column names —
-      * single atomic projection (see JoinView.applyBatch rationale). */
+      * single atomic projection. */
     def changedRAsFk: DataFrame = changedR.select(
       rPk.zip(lJoinCols).map { case (r, l) => col(r).as(l) }: _*)
 
@@ -222,16 +222,15 @@ object MultiView {
   /** Empty LocalRelation with `df`'s schema in `df`'s session — flattens
     * derived-empty lineage so batch-1 analysis never drags the heavy
     * schema-seed plans along. */
-  private[cdc] def emptyLike(df: DataFrame): DataFrame =
+  private[graft] def emptyLike(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(
       df.sparkSession.sparkContext.emptyRDD[Row], df.schema)
 
   /** The per-batch SHARED work: changed-key sets (pre-collected via
     * `keys`, else derived under `maxLocalKeys` — a `None` side runs the
     * distributed fallback) and the two state merges, each pinned lazily.
-    * Returns the ctx plus the merged (pinned) states. Every single-view
-    * `applyBatch` is this + that view's step, so the shared fan-out and
-    * the standalone paths are THE SAME code. */
+    * Returns the ctx plus the merged (pinned) states; every registered
+    * maintainer's step folds this same ctx. */
   private[graft] def batchCtx(stL: DataFrame, stR: DataFrame,
       dl: DataFrame, dr: DataFrame,
       lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
@@ -260,6 +259,35 @@ object MultiView {
               Materializer.liveView(lNext), Materializer.liveView(rNext),
               maxLocalKeys),
      lNext, rNext)
+  }
+
+  /** The join shape every two-topic maintainer assumes: `lJoinCols(i)`
+    * references `rPk(i)`, and the two name sets are disjoint (shared
+    * names would make the rebuild joins and the view projections
+    * ambiguous — two same-named columns in scope with different
+    * values). Checked by [[replay]] and by the multi-view runner before
+    * its stream starts. */
+  private[graft] def requireJoinShape(rPk: Seq[String],
+                                      lJoinCols: Seq[String]): Unit = {
+    require(rPk.size == lJoinCols.size,
+      s"lJoinCols (${lJoinCols.mkString(",")}) must match rPk " +
+        s"(${rPk.mkString(",")}) positionally")
+    require(lJoinCols.intersect(rPk).isEmpty,
+      s"lJoinCols and rPk must not share column names " +
+        s"(got ${lJoinCols.intersect(rPk).mkString(",")}); rename one side")
+  }
+
+  /** The view projection every row-image maintainer (inner, left-outer
+    * and top-k join views) keys on: `viewCols` must carry L's primary
+    * key (the changelog and retract key) and its join columns (the
+    * R-side retract key). Checked in the maintainers' `empty`, so a bad
+    * registration refuses at its first fold, naming the column. */
+  private[cdc] def requireViewCols(viewCols: Seq[String], lPk: Seq[String],
+                                   lJoinCols: Seq[String]): Unit = {
+    val missing = (lPk ++ lJoinCols).distinct.filterNot(viewCols.toSet)
+    require(missing.isEmpty,
+      s"viewCols (${viewCols.mkString(",")}) must include L's primary key " +
+        s"and join columns; missing ${missing.mkString(",")}")
   }
 
   /** Event-count-bounded AUTO-CUTS: derive replay cut times from the
@@ -295,12 +323,17 @@ object MultiView {
     autoCuts(events, events.limit(0), maxEventsPerBatch)
 
   /** Replay two event streams across `cuts` ONCE, maintaining every
-    * registered view. Same micro-batch discipline as the single-view
-    * replays (child session, AQE off, batch-width shuffles, logs pinned
-    * once, next window's key collects prefetched) — those loops stay for
-    * single-view callers; this one amortizes the shared work across N
-    * views. `maxEventsPerBatch` augments the caller's cuts with
-    * [[autoCuts]], so a backlog keeps the broadcast delta path. */
+    * registered view (one maintainer or many). Micro-batch discipline:
+    * AQE is off on a CHILD session (`newSession()`: shared SparkContext
+    * and catalog, independent SQL conf — the caller's conf is never
+    * mutated; micro-batch plans are small, known-shape plans over pinned
+    * inputs, where AQE's stage-by-stage materialization only adds
+    * latency), shuffles run at the batch width, the decoded logs are
+    * pinned once so each window is a cheap filter over the pinned RDD,
+    * and the next window's key collects are prefetched. Results are
+    * handed back re-rooted in the caller's session. `maxEventsPerBatch`
+    * augments the caller's cuts with [[autoCuts]], so a backlog keeps
+    * the broadcast delta path. */
   def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
              lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
              maintainers: Seq[Maintainer[_]],
@@ -313,12 +346,7 @@ object MultiView {
     require(maintainers.distinct.size == maintainers.size,
       "each maintainer must be a distinct instance (results are keyed " +
         "by identity); build a second instance for a second view")
-    require(rPk.size == lJoinCols.size,
-      s"lJoinCols (${lJoinCols.mkString(",")}) must match rPk " +
-        s"(${rPk.mkString(",")}) positionally")
-    require(lJoinCols.intersect(rPk).isEmpty,
-      s"lJoinCols and rPk must not share column names " +
-        s"(got ${lJoinCols.intersect(rPk).mkString(",")}); rename one side")
+    requireJoinShape(rPk, lJoinCols)
     val parent = lEvents.sparkSession
     val batchWidth = resolveBatchWidth(parent, batchShufflePartitions)
     val child = parent.newSession()
@@ -353,8 +381,9 @@ object MultiView {
     val windows = (Long.MinValue +: allCuts) :+ Long.MaxValue
     val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
     // prefetch the NEXT window's changed-key collects off the per-batch
-    // critical path (JoinView.replay rationale: a window's key sets
-    // depend only on the PINNED logs, never on earlier batches) — on a
+    // critical path: a window's key sets depend only on the PINNED logs,
+    // never on earlier batches. Look-ahead is one window (an eager wave
+    // would hold every window's key set in driver memory at once), on a
     // dedicated bounded pool with a finite loud-failure join (Prefetch)
     val prefetch = new Prefetch
     def keysFor(i: Int) = {

@@ -8,7 +8,7 @@ package graft.cdc
   * an unbounded wait hides a wedged collect job forever. Each replay
   * now owns a small daemon pool (two threads: the L and R collects of
   * the single look-ahead window — look-ahead is bounded to one window
-  * by design, see JoinView.replay) and joins with a generous but FINITE
+  * by design, see MultiView.replay) and joins with a generous but FINITE
   * timeout that fails loudly instead of wedging.
   */
 private[cdc] final class Prefetch(threads: Int = 2) {

@@ -563,7 +563,7 @@ object Dedup {
       case Left(labels) => return labels
       case Right(pinned) => pinned
     }
-    // AQE off for the propagation loop (same rationale as JoinView.replay:
+    // AQE off for the propagation loop (same rationale as MultiView.replay:
     // small known-shape per-round plans over pinned inputs; Structured
     // Streaming-style micro-batches gain nothing from adaptive re-planning
     // and pay its stage-by-stage latency). The override lives on a CHILD

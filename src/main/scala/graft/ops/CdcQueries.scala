@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc.ChangelogGen
 
@@ -430,6 +430,13 @@ object CdcQueries {
     finally s.catalog.dropTempView(internal)
   }
 
+  /** `round(c, 2)` of a DOUBLE as DuckDB computes it: round(c·100)/100
+    * over the binary value. Spark's `round(c, 2)` rounds the shortest
+    * decimal form instead, so a half-way-looking product such as
+    * 262579.35 × 1.1 (binary 288837.28499999997…) reads 288837.285 and
+    * rounds up to .29 where DuckDB gives .28. */
+  private def round2(c: Column): Column = round(c * 100, 0) / 100
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Full replay -> current state (one row per surviving key).
     "cdc_materialize" -> ((s, dir) =>
@@ -717,8 +724,8 @@ object CdcQueries {
       graft.cdc.JoinDistinctView.minMaxView(st, "c_nationkey",
                                             "o_totalprice")
         .select(col("c_nationkey"),
-                round(col("min_o_totalprice"), 2).as("min_price"),
-                round(col("max_o_totalprice"), 2).as("max_price"))
+                round2(col("min_o_totalprice")).as("min_price"),
+                round2(col("max_o_totalprice")).as("max_price"))
         .orderBy(col("c_nationkey"))
     }),
 
@@ -727,8 +734,8 @@ object CdcQueries {
       graft.cdc.JoinDistinctView.percentileView(st, "c_nationkey",
           "o_totalprice", Seq(0.5, 0.95))
         .select(col("c_nationkey"),
-                round(col("p50_o_totalprice"), 2).as("p50_price"),
-                round(col("p95_o_totalprice"), 2).as("p95_price"))
+                round2(col("p50_o_totalprice")).as("p50_price"),
+                round2(col("p95_o_totalprice")).as("p95_price"))
         .orderBy(col("c_nationkey"))
     }),
 

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 import graft.cdc.{Materializer, Maxwell, RowDecoder, TableSpec}
+import graft.cdc.MultiView.emptyLike
 
 /** Structured-Streaming CDC pipeline — the streaming analogue of the
   * reference's consume loop (`/root/reference/cdc_manager.go:109-299`),
@@ -108,12 +109,12 @@ object CdcStream {
     must(fs.rename(tmp, dst), s"rename $tmp -> $dst")
   }
 
-  /** LOUD refusal for the NON-EVOLVABLE restore paths (join family,
-    * snowflake, the dedicated pair-state/moments/top-k sinks): their
-    * maintained states key by the decoded columns and cannot evolve in
-    * place, so any schema drift between a persisted table state and
-    * the current spec refuses naming the drift and the rebuild recipe
-    * instead of surfacing as an opaque mid-plan union/analysis error.
+  /** LOUD refusal for the NON-EVOLVABLE restore paths (the multi-view
+    * and snowflake runners): their maintained states key by the decoded
+    * columns and cannot evolve in place, so any schema drift between a
+    * persisted table state and the current spec refuses naming the drift
+    * and the rebuild recipe instead of surfacing as an opaque mid-plan
+    * union/analysis error.
     * The single-topic [[maintainTableViewsToParquet]] path is the one
     * with an ABSORB contract (`allowEvolution`). */
   private def refuseStateDrift(persisted: DataFrame, delta: DataFrame,
@@ -143,7 +144,7 @@ object CdcStream {
     * multiplicities, moments) would double-count the delta. Each
     * generation therefore records the batchId that produced it; a batch
     * that finds its own id on the live generation skips the fold
-    * entirely, upgrading the fold faces from at-least-once to
+    * entirely, upgrading the fold maintainers from at-least-once to
     * exactly-once application. */
   private def appliedMarker(batchId: Long): String = s"_applied_$batchId"
 
@@ -615,6 +616,84 @@ object CdcStream {
       f -> spark.read.parquet(s"$genRoot/${viewName}__$f")).toMap
   }
 
+  /** Generation entries only the per-view streaming faces wrote (one
+    * view per root, persisted as bare `view`/`agg`/`ranked`/`pairs`/
+    * `groups`, with the view's table state as `state` beside them).
+    * The runners name every view file `<name>__<file>`, and the table
+    * runner reads `state` as the TABLE state — so a face-written root
+    * would be misread, not merely fail. */
+  private val RemovedFaceEntries = Set("view", "agg", "ranked", "pairs",
+                                       "groups")
+
+  /** [[liveGenerationRoot]] of a view runner's root, REFUSING a
+    * generation written by one of the removed single-view faces before
+    * anything reads it (see [[RemovedFaceEntries]]). One listing of the
+    * generation directory per batch. */
+  private def liveViewGeneration(spark: SparkSession, rootPath: String,
+                                 surface: String): Option[String] = {
+    val root = liveGenerationRoot(spark, s"$rootPath/current")
+    root.foreach { r =>
+      val rootP = new org.apache.hadoop.fs.Path(r)
+      val found = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(rootP).map(_.getPath.getName)
+        .filter(RemovedFaceEntries).sorted
+      if (found.nonEmpty)
+        throw new IllegalStateException(
+          s"$surface: the generation at $r holds " +
+            s"[${found.mkString(", ")}], the layout of a removed " +
+            s"single-view streaming face, which this runner cannot " +
+            s"resume. Rebuild: stop the stream, delete $rootPath and the " +
+            s"checkpoint, then replay the changelog through this runner " +
+            s"with the view registered by its factory")
+    }
+    root
+  }
+
+  /** One registered view's part of a runner batch's commit: its
+    * changelog keys, its face, and its state files, both built on
+    * demand so the commit runs their Spark actions in its own order. */
+  private[streaming] final case class ViewCommit(
+      name: String, faceKeys: Seq[String], face: () => DataFrame,
+      files: () => Map[String, DataFrame])
+
+  /** The commit tail every view runner shares, once per streaming batch:
+    * pin each view's next face, diff it against the live
+    * `<name>__view` into `<name>/changes/batch=<id>`, then write the
+    * runner's table states (`writeTables`), every view's state files and
+    * face, and the applied-batch marker into ONE swapped generation, and
+    * finally apply the changelog `retention`. The diff reads the live
+    * generation before the swap replaces it; overwriting `batch=<id>`
+    * keeps a crash-replay a no-op rewrite. */
+  private def commitViews(spark: SparkSession, rootPath: String,
+                          root: Option[String], batchId: Long,
+                          views: Seq[ViewCommit],
+                          retention: Option[(Int, Int)])
+                         (writeTables: String => Unit): Unit = {
+    val faces = views.map { v =>
+      val nextFace = v.face().localCheckpoint()
+      val prevFace = root
+        .map(r => spark.read.parquet(s"$r/${v.name}__view"))
+        .getOrElse(emptyLike(nextFace))
+      writeChangesBatch(viewDelta(prevFace, nextFace, v.faceKeys),
+        s"$rootPath/${v.name}/changes/batch=$batchId")
+      nextFace
+    }
+    swapGeneration(spark, s"$rootPath/current") { tmp =>
+      writeTables(tmp)
+      views.foreach { v =>
+        v.files().foreach { case (f, df) =>
+          df.write.mode("overwrite").parquet(s"$tmp/${v.name}__$f") }
+      }
+      views.zip(faces).foreach { case (v, f) =>
+        f.write.mode("overwrite").parquet(s"$tmp/${v.name}__view") }
+      writeMarker(spark, tmp, batchId)
+    }
+    retention.foreach { case (keep, max) =>
+      views.foreach(v =>
+        compactIfNeeded(spark, s"$rootPath/${v.name}", keep, max))
+    }
+  }
+
   /** Live (tombstone-filtered) view of a materialized state table. */
   def readCurrentState(spark: SparkSession, statePath: String): DataFrame =
     Materializer.liveView(readState(spark, statePath).getOrElse(
@@ -677,500 +756,6 @@ object CdcStream {
       .start()
   }
 
-  /** Maintain an incrementally-updated JOIN VIEW `L ⋈ R` from a SINGLE
-    * changelog stream carrying both topics — the streaming face of
-    * [[graft.cdc.JoinView]]. The reference's consumer group subscribes to
-    * many tables' topics at once (`cdc_manager.go:151-156`); here the
-    * combined envelope stream is routed by (database, table) into the two
-    * sides' deltas, the delta-join formula updates (stateL, stateR, view),
-    * and all THREE tables are persisted as one generation under
-    * `rootPath/current` with a single directory swap — state and view
-    * must advance atomically together, or the next batch's delta join
-    * reads a torn pair. Same crash discipline as [[materializeToParquet]]
-    * (complete generation always readable; replayed batch re-derives the
-    * in-flight one), same per-batch cost shape as `JoinView.applyBatch`
-    * (delta-bounded: no full-state shuffle, broadcast rebuilds). Emits
-    * the view's own changelog keyed by `lPk` (each fact owns at most one
-    * inner-join row when `rPk` is R's primary key) — CDC OUT like the
-    * fold faces, exactly-once via the applied-batch marker. */
-  def maintainJoinViewToParquet(envelope: DataFrame, lSpec: TableSpec,
-                                rSpec: TableSpec, lJoinCols: Seq[String],
-                                viewCols: Seq[String], rootPath: String,
-                                checkpointPath: String,
-                                retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.JoinView
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        // the merge-based rebuild is replay-idempotent, but the emitted
-        // changes are not (a re-diff against the post-apply view would
-        // emit empty) — the marker gates the whole body
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          // route by table; pin the decoded deltas — applyBatch's contract
-          // wants cheap re-scans and each delta is read by the merge, the
-          // key sets, and the broadcasts
-          val dl = changeEvents(batch, lSpec).localCheckpoint()
-          val dr = changeEvents(batch, rSpec).localCheckpoint()
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
-          val st0 = root
-            .map { r =>
-              val st = JoinView.State(spark.read.parquet(s"$r/left"),
-                                      spark.read.parquet(s"$r/right"),
-                                      spark.read.parquet(s"$r/view"))
-              refuseStateDrift(st.left, dl, lSpec,
-                               "maintainJoinViewToParquet", rootPath)
-              refuseStateDrift(st.right, dr, rSpec,
-                               "maintainJoinViewToParquet", rootPath)
-              st
-            }
-            .getOrElse {
-              val lS = emptyLike(Materializer.compact(dl.limit(0), lSpec.primaryKey))
-              val rS = emptyLike(Materializer.compact(dr.limit(0), rSpec.primaryKey))
-              val joinCond = lJoinCols.zip(rSpec.primaryKey)
-                .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-              JoinView.State(lS, rS, emptyLike(
-                lS.drop(Materializer.MetaCols: _*)
-                  .join(rS.drop(Materializer.MetaCols: _*), joinCond)
-                  .select(viewCols.map(col): _*)))
-            }
-          val next = JoinView.applyBatch(st0, dl, dr, lSpec.primaryKey,
-            rSpec.primaryKey, lJoinCols, viewCols)
-          val nextView = next.view.localCheckpoint()
-          writeChangesBatch(viewDelta(st0.view, nextView, lSpec.primaryKey),
-            s"$rootPath/changes/batch=$batchId")
-          // write the whole generation to tmp (reads come from the live
-          // generation — no read-own-truncation), then promote in one swap
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.left.write.mode("overwrite").parquet(s"$tmp/left")
-            next.right.write.mode("overwrite").parquet(s"$tmp/right")
-            nextView.write.mode("overwrite").parquet(s"$tmp/view")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming face of [[graft.cdc.LeftJoinView]] — a LEFT OUTER join
-    * view ("ALL live orders, customer columns when known, NULL
-    * otherwise") maintained from a two-topic changelog stream. Identical
-    * generation/crash discipline to [[maintainJoinViewToParquet]]; the
-    * difference is semantic — facts survive in the persisted view as
-    * NULL-padded rows while their dimension is absent, and the pad is
-    * retracted in the batch where the dimension lands (the changelog
-    * shows that dance as updates on the fact's key: pad -> joined ->
-    * re-pad). Read with [[readJoinView]] (same layout). */
-  def maintainLeftJoinViewToParquet(envelope: DataFrame, lSpec: TableSpec,
-                                    rSpec: TableSpec, lJoinCols: Seq[String],
-                                    viewCols: Seq[String], rootPath: String,
-                                    checkpointPath: String,
-                                    retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.LeftJoinView
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          val dl = changeEvents(batch, lSpec).localCheckpoint()
-          val dr = changeEvents(batch, rSpec).localCheckpoint()
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
-          val st0 = root
-            .map { r =>
-              val st = LeftJoinView.State(spark.read.parquet(s"$r/left"),
-                                          spark.read.parquet(s"$r/right"),
-                                          spark.read.parquet(s"$r/view"))
-              refuseStateDrift(st.left, dl, lSpec,
-                               "maintainLeftJoinViewToParquet", rootPath)
-              refuseStateDrift(st.right, dr, rSpec,
-                               "maintainLeftJoinViewToParquet", rootPath)
-              st
-            }
-            .getOrElse {
-              val lS = emptyLike(Materializer.compact(dl.limit(0), lSpec.primaryKey))
-              val rS = emptyLike(Materializer.compact(dr.limit(0), rSpec.primaryKey))
-              LeftJoinView.State(lS, rS, emptyLike(LeftJoinView.directView(
-                lS.drop(Materializer.MetaCols: _*),
-                rS.drop(Materializer.MetaCols: _*),
-                rSpec.primaryKey, lJoinCols, viewCols)))
-            }
-          val next = LeftJoinView.applyBatch(st0, dl, dr, lSpec.primaryKey,
-            rSpec.primaryKey, lJoinCols, viewCols)
-          val nextView = next.view.localCheckpoint()
-          writeChangesBatch(viewDelta(st0.view, nextView, lSpec.primaryKey),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.left.write.mode("overwrite").parquet(s"$tmp/left")
-            next.right.write.mode("overwrite").parquet(s"$tmp/right")
-            nextView.write.mode("overwrite").parquet(s"$tmp/view")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming face of [[graft.cdc.JoinAggView]] — an AGGREGATE-OVER-JOIN
-    * view ("revenue per customer nation") maintained from a two-topic
-    * changelog stream, restart-safe. Per batch: route the envelope by
-    * table, compute the retract/insert delta-join rows from the pre/post
-    * merge states, fold them into the per-group sums, and persist
-    * (left, right, agg) as ONE parquet generation with a single directory
-    * swap. The join result itself is never materialized — the persisted
-    * aggregate is O(|groups|). Pass the same `valueCast` every run (it is
-    * part of the persisted sum's type contract; decimal casts make the
-    * fold exact). Same crash discipline as [[maintainJoinViewToParquet]].
-    * Read with [[readJoinAggView]]. */
-  def maintainJoinAggToParquet(envelope: DataFrame, lSpec: TableSpec,
-                               rSpec: TableSpec, lJoinCols: Seq[String],
-                               groupCols: Seq[String], valueCol: String,
-                               rootPath: String, checkpointPath: String,
-                               valueCast: Column => Column = identity,
-                               retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.JoinAggView
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        // the fold itself is replay-idempotent (retract/insert over
-        // identical pre/post states cancels), but the emitted changes
-        // are not — a re-diff against the post-fold view would emit an
-        // empty batch over the true one — so the marker gates both
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          val dl = changeEvents(batch, lSpec).localCheckpoint()
-          val dr = changeEvents(batch, rSpec).localCheckpoint()
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
-          val st0 = root
-            .map { r =>
-              val st = JoinAggView.State(spark.read.parquet(s"$r/left"),
-                                         spark.read.parquet(s"$r/right"),
-                                         spark.read.parquet(s"$r/agg"))
-              refuseStateDrift(st.left, dl, lSpec,
-                               "maintainJoinAggToParquet", rootPath)
-              refuseStateDrift(st.right, dr, rSpec,
-                               "maintainJoinAggToParquet", rootPath)
-              st
-            }
-            .getOrElse {
-              val lS = emptyLike(Materializer.compact(dl.limit(0), lSpec.primaryKey))
-              val rS = emptyLike(Materializer.compact(dr.limit(0), rSpec.primaryKey))
-              JoinAggView.State(lS, rS, emptyLike(JoinAggView.directAgg(
-                lS.drop(Materializer.MetaCols: _*),
-                rS.drop(Materializer.MetaCols: _*),
-                rSpec.primaryKey, lJoinCols, groupCols, valueCol, valueCast)))
-            }
-          val next = JoinAggView.applyBatch(st0, dl, dr, lSpec.primaryKey,
-            rSpec.primaryKey, lJoinCols, groupCols, valueCol, valueCast)
-          val nextAgg = next.agg.localCheckpoint()
-          writeChangesBatch(viewDelta(JoinAggView.view(st0, valueCol),
-                    JoinAggView.view(next.copy(agg = nextAgg), valueCol),
-                    groupCols),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.left.write.mode("overwrite").parquet(s"$tmp/left")
-            next.right.write.mode("overwrite").parquet(s"$tmp/right")
-            nextAgg.write.mode("overwrite").parquet(s"$tmp/agg")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming face of [[graft.cdc.JoinDistinctView]] — exact
-    * COUNT(DISTINCT) over a two-topic join ("distinct customers with a
-    * live order per nation"), restart-safe. The persisted pair
-    * multiplicities are a FOLD, so the applied-batch marker makes the
-    * replay exactly-once (see [[appliedMarker]]); the view's own
-    * changelog is emitted per batch like the other fold faces. Read the
-    * view with [[readDistinctCountView]]. */
-  def maintainJoinDistinctToParquet(envelope: DataFrame, lSpec: TableSpec,
-                                    rSpec: TableSpec, lJoinCols: Seq[String],
-                                    groupCol: String, valueCol: String,
-                                    rootPath: String, checkpointPath: String,
-                                    retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.JoinDistinctView
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          val dl = changeEvents(batch, lSpec).localCheckpoint()
-          val dr = changeEvents(batch, rSpec).localCheckpoint()
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
-          val st0 = root
-            .map { r =>
-              val st = JoinDistinctView.State(
-                spark.read.parquet(s"$r/left"),
-                spark.read.parquet(s"$r/right"),
-                spark.read.parquet(s"$r/pairs"),
-                spark.read.parquet(s"$r/groups"))
-              refuseStateDrift(st.left, dl, lSpec,
-                               "maintainJoinDistinctToParquet", rootPath)
-              refuseStateDrift(st.right, dr, rSpec,
-                               "maintainJoinDistinctToParquet", rootPath)
-              st
-            }
-            .getOrElse {
-              val lS = emptyLike(Materializer.compact(dl.limit(0), lSpec.primaryKey))
-              val rS = emptyLike(Materializer.compact(dr.limit(0), rSpec.primaryKey))
-              val joinCond = lJoinCols.zip(rSpec.primaryKey)
-                .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-              val rows0 = lS.drop(Materializer.MetaCols: _*)
-                .join(rS.drop(Materializer.MetaCols: _*), joinCond)
-                .select(col(groupCol).as("g"), col(valueCol).as("v"),
-                        lit(1L).as("w"))
-              JoinDistinctView.State(lS, rS,
-                emptyLike(rows0.groupBy(col("g"), col("v"))
-                  .agg(sum(col("w")).as("net"))),
-                emptyLike(rows0.groupBy(col("g"))
-                  .agg(sum(col("w")).as("n_rows"))))
-            }
-          val next = JoinDistinctView.applyBatch(st0, dl, dr,
-            lSpec.primaryKey, rSpec.primaryKey, lJoinCols, groupCol, valueCol)
-          val nextView = JoinDistinctView.view(next, groupCol, valueCol)
-            .localCheckpoint()
-          val prevView = root
-            .map(r => spark.read.parquet(s"$r/view"))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], nextView.schema))
-          writeChangesBatch(viewDelta(prevView, nextView, Seq(groupCol)),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.left.write.mode("overwrite").parquet(s"$tmp/left")
-            next.right.write.mode("overwrite").parquet(s"$tmp/right")
-            next.pairs.write.mode("overwrite").parquet(s"$tmp/pairs")
-            next.groups.write.mode("overwrite").parquet(s"$tmp/groups")
-            nextView.write.mode("overwrite").parquet(s"$tmp/view")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Read the maintained aggregate-over-join view (public face: NULL sum
-    * for all-NULL-value groups), tolerating the swap crash window. */
-  def readJoinAggView(spark: SparkSession, rootPath: String,
-                      valueCol: String): DataFrame =
-    liveGenerationRoot(spark, s"$rootPath/current")
-      .map(r => graft.cdc.JoinAggView.view(
-        graft.cdc.JoinAggView.State(
-          spark.emptyDataFrame, spark.emptyDataFrame,
-          spark.read.parquet(s"$r/agg")), valueCol))
-      .getOrElse(throw new IllegalStateException(
-        s"no join-agg state at $rootPath"))
-
-  /** Read the maintained join view, tolerating the swap crash window
-    * (fall back to the demoted generation, exactly like [[readState]]). */
-  def readJoinView(spark: SparkSession, rootPath: String): DataFrame =
-    liveGenerationRoot(spark, s"$rootPath/current")
-      .map(r => spark.read.parquet(s"$r/view"))
-      .getOrElse(throw new IllegalStateException(
-        s"no join-view state at $rootPath"))
-
-  /** Maintain an incrementally-updated per-group TOP-K view from the
-    * changelog stream — the streaming face of
-    * [[graft.cdc.IncrementalTopK]]. Per batch: decode the delta, merge
-    * into the tombstone-aware base state, re-rank ONLY the groups the
-    * batch touched (promote-on-delete and group-moving updates included),
-    * and persist (state, view) as ONE parquet generation with a single
-    * directory swap — the pair must advance atomically or the next
-    * batch's delta-restricted re-rank reads a torn view. Same crash
-    * discipline as [[maintainJoinViewToParquet]]. */
-  def maintainTopKToParquet(envelope: DataFrame, spec: TableSpec,
-                            groupCol: String, orderCol: String, k: Int,
-                            rootPath: String, checkpointPath: String,
-                            retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.IncrementalTopK
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        // re-ranking from the merged state is replay-idempotent, but the
-        // emitted changes are not (a re-diff against the post-apply view
-        // would emit empty) — the marker gates the whole body
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          val delta = changeEvents(batch, spec).localCheckpoint()
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
-          val st0 = root
-            .map { r =>
-              val st = IncrementalTopK.State(
-                spark.read.parquet(s"$r/state"),
-                spark.read.parquet(s"$r/view"))
-              refuseStateDrift(st.state, delta, spec,
-                               "maintainTopKToParquet", rootPath)
-              st
-            }
-            .getOrElse {
-              val sS = emptyLike(
-                Materializer.compact(delta.limit(0), spec.primaryKey))
-              IncrementalTopK.State(sS, emptyLike(IncrementalTopK.topK(
-                sS.drop(Materializer.MetaCols: _*),
-                spec.primaryKey, groupCol, orderCol, k)))
-            }
-          val next = IncrementalTopK.applyBatch(st0, delta, spec.primaryKey,
-                                                groupCol, orderCol, k)
-          val nextView = next.view.localCheckpoint()
-          // CDC OUT on the (group, rank) key: "rank r of group g now holds
-          // THIS row" — rank-slot semantics, the natural key of a top-k
-          // leaderboard view (a promoted row emits an update on its new
-          // rank slot). The view is k×|groups|-small, so the diff is tiny.
-          writeChangesBatch(viewDelta(st0.view, nextView, Seq(groupCol, "rk")),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.state.write.mode("overwrite").parquet(s"$tmp/state")
-            nextView.write.mode("overwrite").parquet(s"$tmp/view")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Read the maintained top-k view, tolerating the swap crash window. */
-  def readTopKView(spark: SparkSession, rootPath: String): DataFrame =
-    liveGenerationRoot(spark, s"$rootPath/current")
-      .map(r => spark.read.parquet(s"$r/view"))
-      .getOrElse(throw new IllegalStateException(
-        s"no top-k state at $rootPath"))
-
-  /** Streaming face of [[graft.cdc.JoinTopKView]] — a per-group TOP-K
-    * OVER A JOIN ("3 most expensive live orders per customer nation,
-    * with the customer's name") maintained from a two-topic changelog
-    * stream, restart-safe. Per batch: route the envelope by table, let
-    * the delta-join formula advance (left, right, join view) and re-rank
-    * only the touched groups, then persist all four frames as ONE
-    * parquet generation with a single directory swap — state, join view
-    * and rank view must advance atomically or the next batch's
-    * delta-restricted re-rank reads a torn triple. The emitted changelog
-    * is keyed on the (group, rank) slot like [[maintainTopKToParquet]];
-    * promotes arriving through the join (the ranked row's FACT deleted,
-    * or the DIMENSION holding it deleted / moved) emit as updates on the
-    * slot they land in. Same crash discipline as
-    * [[maintainJoinViewToParquet]]. Read with [[readJoinTopKView]]. */
-  def maintainJoinTopKToParquet(envelope: DataFrame, lSpec: TableSpec,
-                                rSpec: TableSpec, lJoinCols: Seq[String],
-                                viewCols: Seq[String], groupCol: String,
-                                orderCol: String, k: Int,
-                                rootPath: String, checkpointPath: String,
-                                retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.{JoinTopKView, JoinView, IncrementalTopK}
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        // the rank recompute is replay-idempotent, but the emitted
-        // changes are not — the marker gates the whole body
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          val dl = changeEvents(batch, lSpec).localCheckpoint()
-          val dr = changeEvents(batch, rSpec).localCheckpoint()
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
-          val st0 = root
-            .map { r =>
-              val st = JoinTopKView.State(
-                JoinView.State(spark.read.parquet(s"$r/left"),
-                               spark.read.parquet(s"$r/right"),
-                               spark.read.parquet(s"$r/view")),
-                spark.read.parquet(s"$r/ranked"))
-              refuseStateDrift(st.join.left, dl, lSpec,
-                               "maintainJoinTopKToParquet", rootPath)
-              refuseStateDrift(st.join.right, dr, rSpec,
-                               "maintainJoinTopKToParquet", rootPath)
-              st
-            }
-            .getOrElse {
-              val lS = emptyLike(Materializer.compact(dl.limit(0), lSpec.primaryKey))
-              val rS = emptyLike(Materializer.compact(dr.limit(0), rSpec.primaryKey))
-              val joinCond = lJoinCols.zip(rSpec.primaryKey)
-                .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-              val emptyView = emptyLike(
-                lS.drop(Materializer.MetaCols: _*)
-                  .join(rS.drop(Materializer.MetaCols: _*), joinCond)
-                  .select(viewCols.map(col): _*))
-              JoinTopKView.State(JoinView.State(lS, rS, emptyView),
-                emptyLike(IncrementalTopK.topK(emptyView, lSpec.primaryKey,
-                                               groupCol, orderCol, k)))
-            }
-          val next = JoinTopKView.applyBatch(st0, dl, dr, lSpec.primaryKey,
-            rSpec.primaryKey, lJoinCols, viewCols, groupCol, orderCol, k)
-          val nextRanked = next.ranked.localCheckpoint()
-          writeChangesBatch(viewDelta(st0.ranked, nextRanked, Seq(groupCol, "rk")),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.join.left.write.mode("overwrite").parquet(s"$tmp/left")
-            next.join.right.write.mode("overwrite").parquet(s"$tmp/right")
-            next.join.view.write.mode("overwrite").parquet(s"$tmp/view")
-            nextRanked.write.mode("overwrite").parquet(s"$tmp/ranked")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Read the maintained top-k-over-join rank view, tolerating the swap
-    * crash window. */
-  def readJoinTopKView(spark: SparkSession, rootPath: String): DataFrame =
-    liveGenerationRoot(spark, s"$rootPath/current")
-      .map(r => spark.read.parquet(s"$r/ranked"))
-      .getOrElse(throw new IllegalStateException(
-        s"no join-top-k state at $rootPath"))
-
   /** One maintained view registered with [[maintainMultiViewToParquet]]:
     * a named [[graft.cdc.MultiView.Maintainer]] plus its parquet state
     * layout and queryable face. `files`/`load` round-trip the
@@ -1190,6 +775,8 @@ object CdcStream {
       faceKeys: Seq[String]) {
     require(name.matches("[A-Za-z0-9_-]+"),
       s"NamedView name '$name' must be a plain path segment")
+    private[streaming] def commit(st: S): ViewCommit =
+      ViewCommit(name, faceKeys, () => face(st), () => files(st))
   }
 
   object NamedView {
@@ -1214,9 +801,7 @@ object CdcStream {
         : NamedView[DataFrame] =
       NamedView(name, JoinAggView.maintainerNamed(groupCols, measures),
         Seq("agg"), a => Map("agg" -> a), m => m("agg"),
-        // viewMulti touches only the agg member of the State triple
-        a => JoinAggView.viewMulti(JoinAggView.State(a, a, a),
-                                   measures.map(_._1)),
+        a => JoinAggView.viewOfAgg(a, measures.map(_._1)),
         groupCols)
     /** COUNT(DISTINCT value) per group over the join; changelog keyed by
       * the group column. */
@@ -1269,9 +854,11 @@ object CdcStream {
     * emit each view's own changelog; persist everything — both table
     * states plus every view's state and face — as ONE generation with a
     * single atomic swap, so the whole view family advances (and
-    * crash-recovers) together. Exactly-once via the applied-batch marker,
-    * exactly like the single-view faces. */
-  /** `maxEventsPerBatch` auto-cuts an oversized micro-batch into
+    * crash-recovers) together. Exactly-once via the applied-batch
+    * marker. The join shape (`lJoinCols` against R's primary key) is
+    * checked before the stream starts.
+    *
+    * `maxEventsPerBatch` auto-cuts an oversized micro-batch into
     * event-count-bounded sub-batches inside the foreachBatch body (see
     * [[maintainTableViewsToParquet]]'s rationale — same swap/marker/
     * changelog semantics). */
@@ -1288,13 +875,15 @@ object CdcStream {
       s"view names must be distinct: ${views.map(_.name).mkString(", ")}")
     val lPk = lSpec.primaryKey
     val rPk = rSpec.primaryKey
+    MultiView.requireJoinShape(rPk, lJoinCols)
     envelope.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
+        val root = liveViewGeneration(spark, rootPath,
+                                      "maintainMultiViewToParquet")
         // emitted changes are not replay-idempotent — marker gates all
         if (!root.exists(r => isApplied(spark, r, batchId))) {
           // LAZY pins: the first action over the deltas materializes
@@ -1304,8 +893,6 @@ object CdcStream {
           // downstream then reads the pinned RDDs.
           val dl = changeEvents(batch, lSpec).localCheckpoint(false)
           val dr = changeEvents(batch, rSpec).localCheckpoint(false)
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
           val (stL, stR) = root
             .map { r =>
               val pair = (spark.read.parquet(s"$r/left"),
@@ -1359,34 +946,11 @@ object CdcStream {
             lCur = lN
             rCur = rN
           }
-          val (lNext, rNext) = (lCur, rCur)
-          val nexts = vCur
-          // faces + per-view changelogs (prev face read from the live
-          // generation; overwrite of batch=<id> keeps crash-replay a
-          // no-op rewrite)
-          val faces = vs.zip(nexts).map { case (v, s) =>
-            val nextFace = v.face(s).localCheckpoint()
-            val prevFace = root
-              .map(r => spark.read.parquet(s"$r/${v.name}__view"))
-              .getOrElse(emptyLike(nextFace.limit(0)))
-            writeChangesBatch(viewDelta(prevFace, nextFace, v.faceKeys),
-              s"$rootPath/${v.name}/changes/batch=$batchId")
-            nextFace
-          }
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            lNext.write.mode("overwrite").parquet(s"$tmp/left")
-            rNext.write.mode("overwrite").parquet(s"$tmp/right")
-            vs.zip(nexts).foreach { case (v, s) =>
-              v.files(s).foreach { case (f, df) =>
-                df.write.mode("overwrite").parquet(s"$tmp/${v.name}__$f") }
-            }
-            vs.zip(faces).foreach { case (v, f) =>
-              f.write.mode("overwrite").parquet(s"$tmp/${v.name}__view") }
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            vs.foreach(v =>
-              compactIfNeeded(spark, s"$rootPath/${v.name}", keep, max))
+          commitViews(spark, rootPath, root, batchId,
+            vs.zip(vCur).map { case (v, s) => v.commit(s) }, retention) {
+            tmp =>
+              lCur.write.mode("overwrite").parquet(s"$tmp/left")
+              rCur.write.mode("overwrite").parquet(s"$tmp/right")
           }
         }
         ()
@@ -1453,14 +1017,13 @@ object CdcStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
+        val root = liveViewGeneration(spark, rootPath,
+                                      "maintainSnowflakeViewToParquet")
         if (!root.exists(r => isApplied(spark, r, batchId))) {
           // lazy pins: with auto-cuts on, the probe count is the action
           // that materializes the deltas (multi-view face rationale)
           val deltas = specs.map(sp =>
             changeEvents(batch, sp).localCheckpoint(false))
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
           val states0: Seq[DataFrame] = root match {
             case Some(r) =>
               (0 until n).map { t =>
@@ -1518,44 +1081,19 @@ object CdcStream {
             stCur = merged
             vpCur = vPost
           }
-          val faces = vs.zip(vCur).map { case (v, s) =>
-            val nextFace = v.face(s).localCheckpoint()
-            val prevFace = root
-              .map(r => spark.read.parquet(s"$r/${v.name}__view"))
-              .getOrElse(emptyLike(nextFace.limit(0)))
-            writeChangesBatch(viewDelta(prevFace, nextFace, v.faceKeys),
-              s"$rootPath/${v.name}/changes/batch=$batchId")
-            nextFace
-          }
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            stCur.zipWithIndex.foreach { case (st, t) =>
-              st.write.mode("overwrite").parquet(s"$tmp/table_$t") }
-            vpCur.zipWithIndex.foreach { case (vp, i) =>
-              vp.write.mode("overwrite").parquet(s"$tmp/chain_${i + 1}") }
-            vs.zip(vCur).foreach { case (v, s) =>
-              v.files(s).foreach { case (f, df) =>
-                df.write.mode("overwrite").parquet(s"$tmp/${v.name}__$f") }
-            }
-            vs.zip(faces).foreach { case (v, f) =>
-              f.write.mode("overwrite").parquet(s"$tmp/${v.name}__view") }
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            vs.foreach(v =>
-              compactIfNeeded(spark, s"$rootPath/${v.name}", keep, max))
+          commitViews(spark, rootPath, root, batchId,
+            vs.zip(vCur).map { case (v, s) => v.commit(s) }, retention) {
+            tmp =>
+              stCur.zipWithIndex.foreach { case (st, t) =>
+                st.write.mode("overwrite").parquet(s"$tmp/table_$t") }
+              vpCur.zipWithIndex.foreach { case (vp, i) =>
+                vp.write.mode("overwrite").parquet(s"$tmp/chain_${i + 1}") }
           }
         }
         ()
       }
       .start()
   }
-
-  /** Read a [[maintainSnowflakeViewToParquet]] view's face by name —
-    * the snowflake faces share [[readMultiView]]'s generation layout
-    * exactly, so this is the same reader. */
-  def readSnowflakeView(spark: SparkSession, rootPath: String,
-                        name: String): DataFrame =
-    readMultiView(spark, rootPath, name)
 
   /** One maintained view registered with
     * [[maintainTableViewsToParquet]] — the single-topic analogue of
@@ -1584,6 +1122,8 @@ object CdcStream {
       sourceCols: Option[Seq[String]] = None) {
     require(name.matches("[A-Za-z0-9_-]+"),
       s"NamedTableView name '$name' must be a plain path segment")
+    private[streaming] def commit(st: S): ViewCommit =
+      ViewCommit(name, faceKeys, () => face(st), () => files(st))
     /** Declare the table columns the view reads (see [[sourceCols]]). */
     def reads(cols: String*): NamedTableView[S] =
       copy(sourceCols = Some(cols))
@@ -1597,26 +1137,35 @@ object CdcStream {
       NamedTableView[DataFrame](name, IncrementalTopK.maintainer(groupCol, orderCol, k),
         Seq("ranked"), v => Map("ranked" -> v), m => m("ranked"),
         v => v, Seq(groupCol, "rk")).reads(groupCol, orderCol)
+    /** The (group, value) pair-multiplicity state with `face` over it;
+      * changelog keyed by the group. */
+    private def pairState(name: String, groupCol: String, valueCol: String)
+        (face: IncrementalAgg.DistinctState => DataFrame)
+        : NamedTableView[IncrementalAgg.DistinctState] =
+      NamedTableView[IncrementalAgg.DistinctState](name,
+        IncrementalAgg.distinctMaintainer(groupCol, valueCol),
+        Seq("pairs", "groups"),
+        st => Map("pairs" -> st.pairs, "groups" -> st.groups),
+        m => IncrementalAgg.DistinctState(m("pairs"), m("groups")),
+        face, Seq(groupCol)).reads(groupCol, valueCol)
     /** COUNT(DISTINCT valueCol) per group; changelog keyed by the group. */
     def distinctCount(name: String, groupCol: String, valueCol: String)
         : NamedTableView[IncrementalAgg.DistinctState] =
-      NamedTableView[IncrementalAgg.DistinctState](name,
-        IncrementalAgg.distinctMaintainer(groupCol, valueCol),
-        Seq("pairs", "groups"),
-        st => Map("pairs" -> st.pairs, "groups" -> st.groups),
-        m => IncrementalAgg.DistinctState(m("pairs"), m("groups")),
-        st => IncrementalAgg.distinctCountView(st, groupCol, valueCol),
-        Seq(groupCol)).reads(groupCol, valueCol)
+      pairState(name, groupCol, valueCol)(
+        IncrementalAgg.distinctCountView(_, groupCol, valueCol))
     /** MIN/MAX(valueCol) per group off the same pair-state family. */
     def minMax(name: String, groupCol: String, valueCol: String)
         : NamedTableView[IncrementalAgg.DistinctState] =
-      NamedTableView[IncrementalAgg.DistinctState](name,
-        IncrementalAgg.distinctMaintainer(groupCol, valueCol),
-        Seq("pairs", "groups"),
-        st => Map("pairs" -> st.pairs, "groups" -> st.groups),
-        m => IncrementalAgg.DistinctState(m("pairs"), m("groups")),
-        st => IncrementalAgg.minMaxView(st, groupCol, valueCol),
-        Seq(groupCol)).reads(groupCol, valueCol)
+      pairState(name, groupCol, valueCol)(
+        IncrementalAgg.minMaxView(_, groupCol, valueCol))
+    /** Exact discrete PERCENTILES `ps` of valueCol per group off the same
+      * pair-state family — exact under deletes of the current median.
+      * `ps` is part of the face's schema: pass the same list every run. */
+    def percentiles(name: String, groupCol: String, valueCol: String,
+                    ps: Seq[Double])
+        : NamedTableView[IncrementalAgg.DistinctState] =
+      pairState(name, groupCol, valueCol)(
+        IncrementalAgg.percentileView(_, groupCol, valueCol, ps))
     /** Moments (sum, sum², n) per group — AVG/VARIANCE state. */
     def moments(name: String, groupCol: String, valueCol: String,
                 valueCast: org.apache.spark.sql.Column =>
@@ -2107,7 +1656,8 @@ object CdcStream {
         // consumed silently (generation retrained, horizon batch still
         // the old-epoch delta)
         healRetrainPending(spark, rootPath)
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
+        val root = liveViewGeneration(spark, rootPath,
+                                      "maintainTableViewsToParquet")
         // snapshot-seeded roots ([[seedTableViewsToParquet]]): events at
         // or before the seed horizon are already reflected in the
         // seeded state — fold only the binlog SUFFIX (the fold
@@ -2121,15 +1671,13 @@ object CdcStream {
             s"crashed between its marker and its swap; re-run the seed " +
             s"before streaming (folding now would silently build from " +
             s"the binlog suffix alone)")
-        // fold faces double-count on replay; marker gates the whole body
+        // fold maintainers double-count on replay; marker gates the body
         if (!root.exists(r => isApplied(spark, r, batchId))) {
           // lazy pin — the autoCuts count (or the first fold action)
           // materializes it; see maintainMultiViewToParquet's rationale
           val deltaAll = changeEvents(batch, spec)
           val delta = seedTs.map(t => deltaAll.filter(col("ts") > t))
             .getOrElse(deltaAll).localCheckpoint(false)
-          def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], df.schema)
           val expectedState = Materializer.compact(delta.limit(0), pk)
           // ALTER-MID-STREAM GATE: the persisted generation was built
           // under a prior spec; classify the drift and either ABSORB
@@ -2221,30 +1769,9 @@ object CdcStream {
               v.maintainer.pin(v.maintainer.step(s, ctx)) }
             stCur = stNext
           }
-          val stNext = stCur
-          val nexts = vCur
-          val faces = vs.zip(nexts).map { case (v, s) =>
-            val nextFace = v.face(s).localCheckpoint()
-            val prevFace = root
-              .map(r => spark.read.parquet(s"$r/${v.name}__view"))
-              .getOrElse(emptyLike(nextFace.limit(0)))
-            writeChangesBatch(viewDelta(prevFace, nextFace, v.faceKeys),
-              s"$rootPath/${v.name}/changes/batch=$batchId")
-            nextFace
-          }
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            stNext.write.mode("overwrite").parquet(s"$tmp/state")
-            vs.zip(nexts).foreach { case (v, s) =>
-              v.files(s).foreach { case (f, df) =>
-                df.write.mode("overwrite").parquet(s"$tmp/${v.name}__$f") }
-            }
-            vs.zip(faces).foreach { case (v, f) =>
-              f.write.mode("overwrite").parquet(s"$tmp/${v.name}__view") }
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            vs.foreach(v =>
-              compactIfNeeded(spark, s"$rootPath/${v.name}", keep, max))
+          commitViews(spark, rootPath, root, batchId,
+            vs.zip(vCur).map { case (v, s) => v.commit(s) }, retention) {
+            tmp => stCur.write.mode("overwrite").parquet(s"$tmp/state")
           }
         }
         } finally guardFs.delete(batchMarker, false)
@@ -2355,8 +1882,6 @@ object CdcStream {
           .cast(decodedType).as("after"),
         lit(null).cast("array<string>").as("changed_cols"))
       .localCheckpoint(false)
-    def emptyLike(df: DataFrame): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], df.schema)
     val st0 = emptyLike(Materializer.compact(events.limit(0), pk))
     val events0 = emptyLike(events.limit(0))
     val vs = views.map(_.asInstanceOf[NamedTableView[Any]])
@@ -2837,199 +2362,6 @@ object CdcStream {
     else None
   }
 
-  /** Maintain an incrementally-updated COUNT(DISTINCT) view from the
-    * changelog stream — the streaming face of
-    * [[graft.cdc.IncrementalAgg.distinctCount]], and the last maintained
-    * view to gain restart safety ("live distinct customers per status",
-    * the reference's handler-upsert analogue,
-    * `/root/reference/cdc_manager.go:277-298`). Per batch: decode the
-    * delta, fold its ±1 (group, value) pair deltas into the persisted
-    * net-multiplicity pair state (delta-restricted — untouched pairs
-    * pass through an anti join unchanged), and persist (pairs, groups,
-    * view) as ONE parquet generation with a single directory swap. The
-    * pair merge is commutative, so a crash-replayed batch against the
-    * demoted generation converges to the same state regardless of how
-    * the backlog is re-batched. Same crash discipline as
-    * [[maintainJoinViewToParquet]]: at every instant one complete
-    * generation is readable. */
-  def maintainDistinctCountToParquet(envelope: DataFrame, spec: TableSpec,
-                                     groupCol: String, valueCol: String,
-                                     rootPath: String, checkpointPath: String,
-                                     retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.IncrementalAgg
-    maintainPairStateToParquet(envelope, spec, groupCol, valueCol,
-      rootPath, checkpointPath,
-      st => IncrementalAgg.distinctCountView(st, groupCol, valueCol),
-      retention)
-  }
-
-  /** MIN/MAX sibling of [[maintainDistinctCountToParquet]] — the same
-    * persisted pair-multiplicity state, a different view over it (see
-    * `IncrementalAgg.minMaxView`): "live price bounds per status" stays
-    * current under deletes of the extremes, restart-safe. */
-  def maintainMinMaxToParquet(envelope: DataFrame, spec: TableSpec,
-                              groupCol: String, valueCol: String,
-                              rootPath: String, checkpointPath: String,
-                              retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.IncrementalAgg
-    maintainPairStateToParquet(envelope, spec, groupCol, valueCol,
-      rootPath, checkpointPath,
-      st => IncrementalAgg.minMaxView(st, groupCol, valueCol), retention)
-  }
-
-  /** Exact-PERCENTILE sibling of [[maintainDistinctCountToParquet]] —
-    * the same persisted pair-multiplicity state, the quantile view over
-    * it (see `IncrementalAgg.percentileView`): "live price quartiles per
-    * status" stays exact under deletes of the current median (which no
-    * insertion-only sketch can recover), restart-safe. Pass the same
-    * `ps` every run — the percentile list is part of the view's schema
-    * contract, though the persisted state itself is ps-independent (the
-    * same root can be re-faced with different percentiles after a code
-    * change without a state rebuild). */
-  def maintainPercentilesToParquet(envelope: DataFrame, spec: TableSpec,
-                                   groupCol: String, valueCol: String,
-                                   ps: Seq[Double], rootPath: String,
-                                   checkpointPath: String,
-                                   retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.IncrementalAgg
-    maintainPairStateToParquet(envelope, spec, groupCol, valueCol,
-      rootPath, checkpointPath,
-      st => IncrementalAgg.percentileView(st, groupCol, valueCol, ps),
-      retention)
-  }
-
-  /** Maintain an incrementally-updated AVG/VARIANCE view from the
-    * changelog stream — the streaming face of
-    * [[graft.cdc.IncrementalAgg.moments]]. Moments (sum, sum of squares,
-    * count) are SUBTRACTABLE, so the persisted state is just one row per
-    * group (no pair table): per batch, fold the delta's ±(v, v², 1)
-    * contributions into the per-group sums (delta-restricted — untouched
-    * groups pass through an anti join unchanged) and persist (state,
-    * view) as one swapped generation. The fold is commutative, so a
-    * crash-replayed batch against the demoted generation converges
-    * regardless of re-batching. Pass the same `valueCast` every run — it
-    * is part of the persisted state's type contract (decimal casts make
-    * the fold exact). Read the view with [[readDistinctCountView]];
-    * AVG = sum/n, VAR = sumsq/n − (sum/n)² are reader-side scalars. */
-  def maintainMomentsToParquet(envelope: DataFrame, spec: TableSpec,
-                               groupCol: String, valueCol: String,
-                               rootPath: String, checkpointPath: String,
-                               valueCast: Column => Column = identity,
-                               retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.IncrementalAgg
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        // moments are a FOLD — replaying an already-applied batch would
-        // double-count (see [[appliedMarker]])
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          // pin the decoded delta: it feeds the merge's key set and union
-          val delta = changeEvents(batch, spec).localCheckpoint()
-          val st0 = root
-            .map(r => spark.read.parquet(s"$r/state"))
-            .getOrElse(IncrementalAgg.emptyMomentsState(
-              delta, groupCol, valueCol, valueCast))
-          val next = IncrementalAgg.momentsBatch(st0, delta, groupCol,
-            valueCol, valueCast).localCheckpoint()
-          val nextView = IncrementalAgg.momentsView(next).localCheckpoint()
-          val prevView = root
-            .map(r => IncrementalAgg.momentsView(
-              spark.read.parquet(s"$r/state")))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], nextView.schema))
-          writeChangesBatch(viewDelta(prevView, nextView, Seq(groupCol)),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.write.mode("overwrite").parquet(s"$tmp/state")
-            nextView.write.mode("overwrite").parquet(s"$tmp/view")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  private def maintainPairStateToParquet(envelope: DataFrame,
-      spec: TableSpec, groupCol: String, valueCol: String,
-      rootPath: String, checkpointPath: String,
-      view: graft.cdc.IncrementalAgg.DistinctState => DataFrame,
-      // (keepBatches, maxBatches): run [[compactIfNeeded]] after every
-      // swap so the producer itself bounds its emitted changelog —
-      // size keepBatches to cover every incremental consumer's
-      // unapplied tail (the JDBC snapshot guard refuses a mis-sized
-      // horizon loudly). None = grow unbounded, prune/compact manually.
-      retention: Option[(Int, Int)] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.IncrementalAgg
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveGenerationRoot(spark, s"$rootPath/current")
-        // crash window [swap done, checkpoint not committed]: the live
-        // generation already contains this batch's fold — re-applying
-        // the ±deltas would double-count (see [[appliedMarker]]); the
-        // emitted changes for this batch are also already on disk
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          // pin the decoded delta: it feeds the pair AND group merges
-          val delta = changeEvents(batch, spec).localCheckpoint()
-          val st0 = root
-            .map(r => IncrementalAgg.DistinctState(
-              spark.read.parquet(s"$r/pairs"),
-              spark.read.parquet(s"$r/groups")))
-            .getOrElse(
-              IncrementalAgg.emptyDistinctState(delta, groupCol, valueCol))
-          val next = IncrementalAgg.distinctCountBatch(st0, delta,
-            groupCol, valueCol)
-          // pinned once: the new view generation is both diffed (below)
-          // and persisted (swap)
-          val nextView = view(next).localCheckpoint()
-          // CDC OUT, before the swap: diff against the PRE-fold view (a
-          // replay that crashed before the swap recomputes the identical
-          // diff; overwrite of batch=<id> makes the rewrite a no-op)
-          val prevView = root
-            .map(r => spark.read.parquet(s"$r/view"))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], nextView.schema))
-          writeChangesBatch(viewDelta(prevView, nextView, Seq(groupCol)),
-            s"$rootPath/changes/batch=$batchId")
-          swapGeneration(spark, s"$rootPath/current") { tmp =>
-            next.pairs.write.mode("overwrite").parquet(s"$tmp/pairs")
-            next.groups.write.mode("overwrite").parquet(s"$tmp/groups")
-            nextView.write.mode("overwrite").parquet(s"$tmp/view")
-            writeMarker(spark, tmp, batchId)
-          }
-          retention.foreach { case (keep, max) =>
-            compactIfNeeded(spark, rootPath, keep, max)
-          }
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Read the maintained count-distinct (or min/max) view, tolerating
-    * the swap crash window. */
-  def readDistinctCountView(spark: SparkSession, rootPath: String): DataFrame =
-    liveGenerationRoot(spark, s"$rootPath/current")
-      .map(r => spark.read.parquet(s"$r/view"))
-      .getOrElse(throw new IllegalStateException(
-        s"no distinct-count state at $rootPath"))
-
   /** JDBC variant of the materialized-state sink (BASELINE.json
     * `spark_approach`: "Structured Streaming + JDBC sink"). Same
     * event-time-correct merge as the parquet path (Materializer.merge with
@@ -3112,10 +2444,11 @@ object CdcStream {
 
   /** Health snapshot of a maintained-view root, for monitoring/lag
     * dashboards. `appliedBatch` is the batch id recorded on the LIVE
-    * generation (-1 before the first marker — the merge-only faces don't
-    * write markers until they emit changelogs); `viewRows` counts the
-    * persisted view; `changesBatches` is the `[lo, hi]` batch-id range
-    * present in the changes log (retention window — what
+    * generation (-1 before the first marker); `viewRows` counts the
+    * persisted view file `viewFile` (a runner's face is
+    * `<name>__view`); `changesBatches` is the `[lo, hi]` batch-id range
+    * present in that view's changes log — `<rootPath>/<name>/changes`
+    * for a `<name>__view` face — (retention window — what
     * [[viewAsOfBatch]] can still reconstruct and what a catching-up
     * [[applyViewChangesToJdbc]] consumer can still drain). */
   final case class ViewStats(appliedBatch: Long, viewRows: Long,
@@ -3135,7 +2468,11 @@ object CdcStream {
     val rows = spark.read.parquet(s"$root/$viewFile").count()
     // committed dirs only — a torn batch a concurrent producer is
     // writing is not yet part of the drainable/reconstructable window
-    val ids = committedBatchIds(spark, rootPath)
+    val changesRoot =
+      if (viewFile.endsWith("__view"))
+        s"$rootPath/${viewFile.stripSuffix("__view")}"
+      else rootPath
+    val ids = committedBatchIds(spark, changesRoot)
     val batches = if (ids.isEmpty) None else Some((ids.min, ids.max))
     ViewStats(applied, rows, batches)
   }

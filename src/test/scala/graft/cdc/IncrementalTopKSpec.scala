@@ -53,8 +53,18 @@ class IncrementalTopKSpec extends SparkSpec {
       .select(col("grp"), col("rk"), col("id"), col("v"))
   }
 
+  /** The top-k view after replaying `ev` across `cuts` — the generic
+    * single-topic replay with this one maintainer. */
+  private def topKReplay(ev: DataFrame, cuts: Seq[Long], pk: Seq[String],
+                         groupCol: String, orderCol: String, k: Int,
+                         maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys)
+      : DataFrame = {
+    val m = IncrementalTopK.maintainer(groupCol, orderCol, k)
+    TableViews.replay(ev, cuts, pk, Seq(m), maxLocalKeys = maxLocalKeys)(m)
+  }
+
   private def replayed(cuts: Seq[Long], k: Int): DataFrame =
-    IncrementalTopK.replay(events, cuts, pk = Seq("id"),
+    topKReplay(events, cuts, pk = Seq("id"),
         groupCol = "grp", orderCol = "v", k = k)
       .select(col("grp"), col("rk"), col("id"), col("v"))
 
@@ -117,7 +127,7 @@ class IncrementalTopKSpec extends SparkSpec {
       val evDf = evs
         .toDF("op", "ts", "seq", "before", "after", "changed_cols")
         .localCheckpoint()
-      val batched = IncrementalTopK.replay(evDf, cuts = Seq(13L, 27L),
+      val batched = topKReplay(evDf, cuts = Seq(13L, 27L),
           pk = Seq("id"), groupCol = "grp", orderCol = "v", k = 2)
         .select(col("grp"), col("rk"), col("id"), col("v"))
       assertSame(batched, recompute(evDf, k = 2))
@@ -183,11 +193,11 @@ class IncrementalTopKSpec extends SparkSpec {
   }
 
   test("over-cap batch runs the distributed fallback (same view)") {
-    // cap = 1: every key/group collect blows the limit, so applyBatch
+    // cap = 1: every key/group collect blows the limit, so the batch
     // must take the cluster-side path (unhinted joins, no LocalRelation)
     // and still produce exactly the recomputed view — promote-on-delete
     // and the group-moving update included
-    val capped = IncrementalTopK.replay(events, Seq(10L), pk = Seq("id"),
+    val capped = topKReplay(events, Seq(10L), pk = Seq("id"),
         groupCol = "grp", orderCol = "v", k = 2, maxLocalKeys = 1)
       .select(col("grp"), col("rk"), col("id"), col("v"))
     assertSame(capped, recompute(events, k = 2))
@@ -205,8 +215,11 @@ class IncrementalTopKSpec extends SparkSpec {
       ("update", 2L, 2L, null.asInstanceOf[Img], Img(1L, "a", 2.0),
        null.asInstanceOf[Seq[String]]))
       .toDF("op", "ts", "seq", "before", "after", "changed_cols")
+    // the update lands in the SECOND window: a from-empty first window
+    // re-ranks the whole merged state (no prior view row can go stale),
+    // so the before-group is consulted only once a view exists
     val e = intercept[Exception] {
-      IncrementalTopK.replay(ev, Seq(), pk = Seq("id"),
+      topKReplay(ev, Seq(1L), pk = Seq("id"),
         groupCol = "grp", orderCol = "v", k = 2).collect()
     }
     def messages(t: Throwable): Seq[String] =
@@ -226,7 +239,7 @@ class IncrementalTopKSpec extends SparkSpec {
 
   test("ordersChangelog view equals closed-form top-3 per status") {
     val ev = ChangelogGen.ordersChangeEvents(spark, sfDir)
-    val view = IncrementalTopK.replay(ev, cuts = Seq(788918400L),
+    val view = topKReplay(ev, cuts = Seq(788918400L),
         pk = Seq("o_orderkey"), groupCol = "o_orderstatus",
         orderCol = "o_totalprice", k = 3)
       .select(col("o_orderstatus"), col("rk"), col("o_orderkey"))

@@ -28,29 +28,26 @@ class JoinAggViewSpec extends SparkSpec {
               struct(col("ck"), col("grp")).as("after"))
   }
 
-  private def emptyState(l: org.apache.spark.sql.DataFrame,
-                         r: org.apache.spark.sql.DataFrame) = {
-    val emptyL = Materializer.compact(l.limit(0), Seq("k"))
-    val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
-    val emptyAgg = JoinAggView.directAgg(
-      emptyL.drop(Materializer.MetaCols: _*),
-      emptyR.drop(Materializer.MetaCols: _*),
-      Seq("ck"), Seq("fk"), Seq("grp"), "price").limit(0)
-    JoinAggView.State(emptyL, emptyR, emptyAgg)
+  private val price = Seq(("price", "price",
+    scala.Predef.identity[org.apache.spark.sql.Column] _))
+
+  /** The aggregate's public face after the batches `cuts` splits the
+    * events up to `hi` into — the generic replay with this one
+    * maintainer. */
+  private def upTo(l: org.apache.spark.sql.DataFrame,
+                   r: org.apache.spark.sql.DataFrame, hi: Long,
+                   cuts: Seq[Long], groupCols: Seq[String] = Seq("grp"),
+                   cap: Int = JoinView.DefaultMaxLocalKeys) = {
+    val m = JoinAggView.maintainerNamed(groupCols, price)
+    JoinAggView.viewOfAgg(MultiView.replay(l.filter(col("ts") <= hi),
+      r.filter(col("ts") <= hi), cuts, Seq("k"), Seq("ck"), Seq("fk"),
+      Seq(m), maxLocalKeys = cap)(m), Seq("price"))
   }
 
-  private def aggRows(st: JoinAggView.State) =
-    JoinAggView.view(st, "price").collect()
+  private def aggRows(view: org.apache.spark.sql.DataFrame) =
+    view.collect()
       .map(r => (r.getString(0), r.getLong(1),
                  Option(r.get(2)).map(_.toString.toDouble))).toSet
-
-  private def step(st: JoinAggView.State, l: org.apache.spark.sql.DataFrame,
-                   r: org.apache.spark.sql.DataFrame, lo: Long, hi: Long) = {
-    def slice(ev: org.apache.spark.sql.DataFrame) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    JoinAggView.applyBatch(st, slice(l), slice(r),
-      Seq("k"), Seq("ck"), Seq("fk"), Seq("grp"), "price")
-  }
 
   test("stepwise: late dim, value update, deletes, group stays exact") {
     val l = lEvents(
@@ -64,15 +61,15 @@ class JoinAggViewSpec extends SparkSpec {
       ("insert", 4L, 2L, (10L, "a")),      // LATE: facts referenced at ts<=2
       ("delete", 8L, 3L, (20L, "b")))      // b disappears entirely
     // batch 1 (ts <= 3): only dim 20 present -> just group b
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(aggRows(st1) == Set(("b", 1L, Some(7.0))),
       "late dimension's facts must not be counted before it arrives")
     // batch 2 (3 < ts <= 6): dim 10 arrives (2 facts join in) + k=1 update
-    val st2 = step(st1, l, r, 3, 6)
+    val st2 = upTo(l, r, 6, Seq(3L))
     assert(aggRows(st2) == Set(("a", 2L, Some(15.0)), ("b", 1L, Some(7.0))))
     // batch 3 (ts > 6): dim 20 deleted -> group b gone (not zero-row);
     // fact 3 deleted -> a shrinks
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(3L, 6L))
     assert(aggRows(st3) == Set(("a", 1L, Some(6.0))),
       "emptied groups must drop out of the view, not linger at zero")
   }
@@ -86,9 +83,9 @@ class JoinAggViewSpec extends SparkSpec {
       ("insert", 1L, 1L, (10L, "a")),
       ("insert", 1L, 2L, (20L, "b")),
       ("update", 5L, 3L, (10L, "b")))  // dim 10 moves a -> b
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(aggRows(st1) == Set(("a", 2L, Some(12.0)), ("b", 1L, Some(2.0))))
-    val st2 = step(st1, l, r, 3, Long.MaxValue)
+    val st2 = upTo(l, r, Long.MaxValue, Seq(3L))
     assert(aggRows(st2) == Set(("b", 3L, Some(14.0))),
       "group-moving dim update must move ALL its facts' contributions")
   }
@@ -102,11 +99,11 @@ class JoinAggViewSpec extends SparkSpec {
     val r = rEvents(
       ("insert", 1L, 1L, (10L, "a")),
       ("insert", 1L, 2L, (20L, null))) // NULL group is a real group
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(aggRows(st1) == Set[(String, Long, Option[Double])](
         ("a", 2L, None), (null, 1L, Some(4.0))),
       "all-NULL-value group must report NULL sum; NULL group must appear")
-    val st2 = step(st1, l, r, 3, Long.MaxValue)
+    val st2 = upTo(l, r, Long.MaxValue, Seq(3L))
     assert(aggRows(st2) == Set[(String, Long, Option[Double])](("a", 2L, None)),
       "NULL group must empty out like any other")
   }
@@ -166,23 +163,7 @@ class JoinAggViewSpec extends SparkSpec {
       ("insert", 1L, 2L, (2L, 10L, 7.0)),
       ("update", 5L, 3L, (2L, 10L, 8.0)))
     val r = rEvents(("insert", 1L, 1L, (10L, "a")))
-    def stepC(st: JoinAggView.State, lo: Long, hi: Long) = {
-      def slice(ev: org.apache.spark.sql.DataFrame) =
-        ev.filter(col("ts") > lo && col("ts") <= hi)
-      JoinAggView.applyBatch(st, slice(l), slice(r),
-        Seq("k"), Seq("ck"), Seq("fk"), Seq("k", "grp"), "price")
-    }
-    val empty = {
-      val eL = Materializer.compact(l.limit(0), Seq("k"))
-      val eR = Materializer.compact(r.limit(0), Seq("ck"))
-      JoinAggView.State(eL, eR, JoinAggView.directAgg(
-        eL.drop(Materializer.MetaCols: _*),
-        eR.drop(Materializer.MetaCols: _*),
-        Seq("ck"), Seq("fk"), Seq("k", "grp"), "price").limit(0))
-    }
-    val st1 = stepC(empty, Long.MinValue, 3)
-    val st2 = stepC(st1, 3, Long.MaxValue)
-    val got = JoinAggView.view(st2, "price").collect()
+    val got = upTo(l, r, Long.MaxValue, Seq(3L), Seq("k", "grp")).collect()
       .map(r => ((r.getLong(0), r.getString(1)), r.getLong(2),
                  r.getDouble(3))).toSet
     assert(got == Set(((1L, "a"), 1L, 5.0), ((2L, "a"), 1L, 8.0)),
@@ -195,11 +176,11 @@ class JoinAggViewSpec extends SparkSpec {
       ("delete", 4L, 2L, (1L, 10L, 5.0)),   // a empties
       ("insert", 8L, 3L, (2L, 10L, 3.0)))   // a returns
     val r = rEvents(("insert", 1L, 1L, (10L, "a")))
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 2)
+    val st1 = upTo(l, r, 2, Seq())
     assert(aggRows(st1) == Set(("a", 1L, Some(5.0))))
-    val st2 = step(st1, l, r, 2, 6)
+    val st2 = upTo(l, r, 6, Seq(2L))
     assert(aggRows(st2).isEmpty, "group must empty out")
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(2L, 6L))
     assert(aggRows(st3) == Set(("a", 1L, Some(3.0))),
       "an emptied group must come back cleanly (no stale zero-row state)")
   }
@@ -215,16 +196,8 @@ class JoinAggViewSpec extends SparkSpec {
       ("insert", 1L, 1L, (10L, "a")),
       ("insert", 4L, 2L, (20L, "b")),
       ("update", 8L, 3L, (20L, "a")))
-    def runWith(cap: Int) = {
-      val bounds = Seq((Long.MinValue, 3L), (3L, 6L), (6L, Long.MaxValue))
-      bounds.foldLeft(emptyState(l, r)) { case (st, (lo, hi)) =>
-        def slice(ev: org.apache.spark.sql.DataFrame) =
-          ev.filter(col("ts") > lo && col("ts") <= hi)
-        JoinAggView.applyBatch(st, slice(l), slice(r),
-          Seq("k"), Seq("ck"), Seq("fk"), Seq("grp"), "price",
-          maxLocalKeys = cap)
-      }
-    }
+    def runWith(cap: Int) =
+      upTo(l, r, Long.MaxValue, Seq(3L, 6L), cap = cap)
     // cap=0 forces the distributed path for EVERY batch (keys and
     // touched groups); results must match the broadcast path exactly
     assert(aggRows(runWith(0)) == aggRows(runWith(100000)),
@@ -234,17 +207,18 @@ class JoinAggViewSpec extends SparkSpec {
   test("replay over the synthesized changelogs equals the direct recompute") {
     val lEv = ChangelogGen.ordersChangeEvents(spark, sfDir)
     val rEv = ChangelogGen.customerChangeEvents(spark, sfDir)
-    val fin = JoinAggView.replay(lEv, rEv,
+    val measure = Seq(("o_totalprice", "o_totalprice",
+      (c: org.apache.spark.sql.Column) => c.cast("decimal(25,10)")))
+    val m = JoinAggView.maintainerNamed(Seq("c_nationkey"), measure)
+    val fin = MultiView.replay(lEv, rEv,
       cuts = Seq(788918400L, 852076800L),
       lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-      lJoinCols = Seq("o_custkey"), groupCols = Seq("c_nationkey"),
-      valueCol = "o_totalprice", valueCast = _.cast("decimal(25,10)"))
-    val maintained = JoinAggView.view(fin, "o_totalprice")
-    val direct = JoinAggView.directAgg(
+      lJoinCols = Seq("o_custkey"), maintainers = Seq(m))
+    val maintained = JoinAggView.viewOfAgg(fin(m), Seq("o_totalprice"))
+    val direct = JoinAggView.directAggNamed(
       ChangelogGen.ordersState(spark, sfDir),
       ChangelogGen.customerState(spark, sfDir),
-      Seq("c_custkey"), Seq("o_custkey"), Seq("c_nationkey"),
-      "o_totalprice", _.cast("decimal(25,10)"))
+      Seq("c_custkey"), Seq("o_custkey"), Seq("c_nationkey"), measure)
       .select(col("c_nationkey"), col("n_rows"),
               when(col("n_vals_o_totalprice") > 0, col("sum_o_totalprice"))
                 .as("sum_o_totalprice"))

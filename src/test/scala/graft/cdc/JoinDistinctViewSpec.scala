@@ -24,25 +24,17 @@ class JoinDistinctViewSpec extends SparkSpec {
               struct(col("ck"), col("grp")).as("after"))
   }
 
-  private def emptyState(l: org.apache.spark.sql.DataFrame,
-                         r: org.apache.spark.sql.DataFrame) = {
-    val eL = Materializer.compact(l.limit(0), Seq("k"))
-    val eR = Materializer.compact(r.limit(0), Seq("ck"))
-    val rows0 = eL.drop(Materializer.MetaCols: _*)
-      .join(eR.drop(Materializer.MetaCols: _*), col("fk") === col("ck"))
-      .select(col("grp").as("g"), col("fk").as("v"), lit(1L).as("w"))
-    JoinDistinctView.State(eL, eR,
-      rows0.groupBy(col("g"), col("v")).agg(sum(col("w")).as("net")).limit(0),
-      rows0.groupBy(col("g")).agg(sum(col("w")).as("n_rows")).limit(0))
-  }
-
-  private def step(st: JoinDistinctView.State,
-                   l: org.apache.spark.sql.DataFrame,
-                   r: org.apache.spark.sql.DataFrame, lo: Long, hi: Long) = {
-    def slice(ev: org.apache.spark.sql.DataFrame) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    JoinDistinctView.applyBatch(st, slice(l), slice(r),
-      Seq("k"), Seq("ck"), Seq("fk"), groupCol = "grp", valueCol = "fk")
+  /** The distinct-count face after the batches `cuts` splits the events
+    * up to `hi` into — the generic replay with this one maintainer. */
+  private def upTo(l: org.apache.spark.sql.DataFrame,
+                   r: org.apache.spark.sql.DataFrame, hi: Long,
+                   cuts: Seq[Long]) = {
+    val m = JoinDistinctView.maintainer("grp", "fk")
+    val res = MultiView.replay(l.filter(col("ts") <= hi),
+      r.filter(col("ts") <= hi), cuts, Seq("k"), Seq("ck"), Seq("fk"),
+      Seq(m))
+    val (pairs, groups) = res(m)
+    JoinDistinctView.State(res.left, res.right, pairs, groups)
   }
 
   private def counts(st: JoinDistinctView.State) =
@@ -58,12 +50,12 @@ class JoinDistinctViewSpec extends SparkSpec {
       ("delete", 9L, 5L, (2L, 10L)))   // 10's LAST order -> drops
     val r = rEvents(
       ("insert", 1L, 1L, (10L, "a")), ("insert", 1L, 2L, (20L, "a")))
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(counts(st1) == Map("a" -> 2L))
-    val st2 = step(st1, l, r, 3, 6)
+    val st2 = upTo(l, r, 6, Seq(3L))
     assert(counts(st2) == Map("a" -> 2L),
       "deleting ONE of two live orders must not drop the customer")
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(3L, 6L))
     assert(counts(st3) == Map("a" -> 1L),
       "deleting the LAST live order must drop the customer")
   }
@@ -74,21 +66,24 @@ class JoinDistinctViewSpec extends SparkSpec {
     val r = rEvents(
       ("insert", 1L, 1L, (10L, "a")), ("insert", 1L, 2L, (20L, "a")),
       ("delete", 5L, 3L, (10L, "a")))
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(counts(st1) == Map("a" -> 2L))
-    val st2 = step(st1, l, r, 3, Long.MaxValue)
+    val st2 = upTo(l, r, Long.MaxValue, Seq(3L))
     assert(counts(st2) == Map("a" -> 1L))
   }
 
   test("replay over the synthesized changelogs equals the direct recompute") {
-    val fin = JoinDistinctView.replay(
+    val m = JoinDistinctView.maintainer("c_nationkey", "o_custkey")
+    val fin = MultiView.replay(
       ChangelogGen.ordersChangeEvents(spark, sfDir),
       ChangelogGen.customerChangeEvents(spark, sfDir),
       cuts = Seq(788918400L, 852076800L),
       lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-      lJoinCols = Seq("o_custkey"),
-      groupCol = "c_nationkey", valueCol = "o_custkey")
-    val maintained = JoinDistinctView.view(fin, "c_nationkey", "o_custkey")
+      lJoinCols = Seq("o_custkey"), maintainers = Seq(m))
+    val (pairs, groups) = fin(m)
+    val maintained = JoinDistinctView.view(
+      JoinDistinctView.State(fin.left, fin.right, pairs, groups),
+      "c_nationkey", "o_custkey")
     val direct = ChangelogGen.ordersState(spark, sfDir)
       .join(ChangelogGen.customerState(spark, sfDir),
             col("o_custkey") === col("c_custkey"))

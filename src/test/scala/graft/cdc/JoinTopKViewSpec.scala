@@ -32,30 +32,18 @@ class JoinTopKViewSpec extends SparkSpec {
 
   private val viewCols = Seq("k", "fk", "grp", "price")
 
-  private def emptyState(l: DataFrame, r: DataFrame, k: Int) = {
-    val emptyL = Materializer.compact(l.limit(0), Seq("k"))
-    val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
-    val emptyView = emptyL.drop(Materializer.MetaCols: _*)
-      .join(emptyR.drop(Materializer.MetaCols: _*), col("fk") === col("ck"))
-      .select(viewCols.map(col): _*).limit(0)
-    val emptyRanked =
-      IncrementalTopK.topK(emptyView, Seq("k"), "grp", "price", k).limit(0)
-    JoinTopKView.State(JoinView.State(emptyL, emptyR, emptyView),
-                       emptyRanked)
+  /** The (join view, ranked) state after the batches `cuts` splits the
+    * events up to `hi` into — the generic replay with this one
+    * maintainer. */
+  private def upTo(l: DataFrame, r: DataFrame, hi: Long, cuts: Seq[Long],
+                   k: Int = 2, cap: Int = JoinView.DefaultMaxLocalKeys) = {
+    val m = JoinTopKView.maintainer(viewCols, "grp", "price", k)
+    MultiView.replay(l.filter(col("ts") <= hi), r.filter(col("ts") <= hi),
+      cuts, Seq("k"), Seq("ck"), Seq("fk"), Seq(m), maxLocalKeys = cap)(m)
   }
 
-  private def step(st: JoinTopKView.State, l: DataFrame, r: DataFrame,
-                   lo: Long, hi: Long, k: Int = 2,
-                   cap: Int = JoinView.DefaultMaxLocalKeys) = {
-    def slice(ev: DataFrame) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    JoinTopKView.applyBatch(st, slice(l), slice(r),
-      Seq("k"), Seq("ck"), Seq("fk"), viewCols, "grp", "price", k,
-      maxLocalKeys = cap)
-  }
-
-  private def ranks(st: JoinTopKView.State) =
-    st.ranked.collect()
+  private def ranks(st: (DataFrame, DataFrame)) =
+    st._2.collect()
       .map(r => (r.getAs[String]("grp"), r.getAs[Int]("rk"),
                  r.getAs[Long]("k"), r.getAs[Double]("price"))).toSet
 
@@ -66,9 +54,9 @@ class JoinTopKViewSpec extends SparkSpec {
       ("insert", 1L, 3L, (3L, 10L, 5.0)),
       ("delete", 5L, 4L, (1L, 10L, 9.0)))  // current #1 dies
     val r = rEvents(("insert", 1L, 1L, (10L, "a")))
-    val st1 = step(emptyState(l, r, 2), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(ranks(st1) == Set(("a", 1, 1L, 9.0), ("a", 2, 2L, 7.0)))
-    val st2 = step(st1, l, r, 3, Long.MaxValue)
+    val st2 = upTo(l, r, Long.MaxValue, Seq(3L))
     assert(ranks(st2) == Set(("a", 1, 2L, 7.0), ("a", 2, 3L, 5.0)),
       "deleting the top row must promote the runner-up into the view")
   }
@@ -81,12 +69,12 @@ class JoinTopKViewSpec extends SparkSpec {
       ("insert", 1L, 1L, (10L, "a")),
       ("insert", 4L, 2L, (20L, "b")),      // LATE dim: fact 2 joins now
       ("delete", 8L, 3L, (10L, "a")))      // dim dies -> fact 1 leaves view
-    val st1 = step(emptyState(l, r, 2), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(ranks(st1) == Set(("a", 1, 1L, 9.0)),
       "a fact whose dimension has not arrived must not rank")
-    val st2 = step(st1, l, r, 3, 6)
+    val st2 = upTo(l, r, 6, Seq(3L))
     assert(ranks(st2) == Set(("a", 1, 1L, 9.0), ("b", 1, 2L, 7.0)))
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(3L, 6L))
     assert(ranks(st3) == Set(("b", 1, 2L, 7.0)),
       "deleting a dimension must evict its joined facts from the ranks")
   }
@@ -101,10 +89,10 @@ class JoinTopKViewSpec extends SparkSpec {
       ("insert", 1L, 1L, (10L, "a")),
       ("insert", 1L, 2L, (20L, "b")),
       ("update", 5L, 3L, (10L, "b")))  // dim 10 moves a -> b
-    val st1 = step(emptyState(l, r, 2), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(ranks(st1) == Set(("a", 1, 1L, 9.0), ("a", 2, 2L, 7.0),
                              ("b", 1, 3L, 5.0), ("b", 2, 4L, 3.0)))
-    val st2 = step(st1, l, r, 3, Long.MaxValue)
+    val st2 = upTo(l, r, Long.MaxValue, Seq(3L))
     assert(ranks(st2) == Set(("b", 1, 1L, 9.0), ("b", 2, 2L, 7.0)),
       "old group must empty AND new group must re-rank with the movers")
   }
@@ -120,12 +108,8 @@ class JoinTopKViewSpec extends SparkSpec {
       ("insert", 1L, 1L, (10L, "a")),
       ("insert", 4L, 2L, (20L, "b")),
       ("update", 8L, 3L, (20L, "a")))
-    def runWith(cap: Int) = {
-      val bounds = Seq((Long.MinValue, 3L), (3L, 6L), (6L, Long.MaxValue))
-      bounds.foldLeft(emptyState(l, r, 2)) { case (st, (lo, hi)) =>
-        step(st, l, r, lo, hi, cap = cap)
-      }
-    }
+    def runWith(cap: Int) =
+      upTo(l, r, Long.MaxValue, Seq(3L, 6L), cap = cap)
     // cap=0 forces distributed key sets AND a distributed touched-group
     // set for every batch; the view must match the broadcast path
     assert(ranks(runWith(0)) == ranks(runWith(100000)),
@@ -133,15 +117,15 @@ class JoinTopKViewSpec extends SparkSpec {
   }
 
   test("replay over the synthesized changelogs equals the direct recompute") {
-    val fin = JoinTopKView.replay(
+    val m = JoinTopKView.maintainer(
+      Seq("o_orderkey", "o_custkey", "c_nationkey", "c_name",
+          "o_totalprice"), "c_nationkey", "o_totalprice", k = 3)
+    val (joinView, ranked) = MultiView.replay(
       ChangelogGen.ordersChangeEvents(spark, sfDir),
       ChangelogGen.customerChangeEvents(spark, sfDir),
       cuts = Seq(788918400L, 852076800L),
       lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-      lJoinCols = Seq("o_custkey"),
-      viewCols = Seq("o_orderkey", "o_custkey", "c_nationkey", "c_name",
-                     "o_totalprice"),
-      groupCol = "c_nationkey", orderCol = "o_totalprice", k = 3)
+      lJoinCols = Seq("o_custkey"), maintainers = Seq(m))(m)
     val direct = IncrementalTopK.topK(
       ChangelogGen.ordersState(spark, sfDir)
         .join(ChangelogGen.customerState(spark, sfDir),
@@ -149,9 +133,9 @@ class JoinTopKViewSpec extends SparkSpec {
         .select(col("o_orderkey"), col("o_custkey"), col("c_nationkey"),
                 col("c_name"), col("o_totalprice")),
       Seq("o_orderkey"), "c_nationkey", "o_totalprice", 3)
-    assert(fin.ranked.count() > 0)
-    assert(fin.ranked.exceptAll(direct).isEmpty &&
-           direct.exceptAll(fin.ranked).isEmpty,
+    assert(ranked.count() > 0)
+    assert(ranked.exceptAll(direct).isEmpty &&
+           direct.exceptAll(ranked).isEmpty,
       "maintained top-k-over-join diverges from direct recompute")
     // and the maintained join view itself stayed exact
     val directView = ChangelogGen.ordersState(spark, sfDir)
@@ -159,7 +143,7 @@ class JoinTopKViewSpec extends SparkSpec {
             col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("o_custkey"), col("c_nationkey"),
               col("c_name"), col("o_totalprice"))
-    assert(fin.join.view.exceptAll(directView).isEmpty &&
-           directView.exceptAll(fin.join.view).isEmpty)
+    assert(joinView.exceptAll(directView).isEmpty &&
+           directView.exceptAll(joinView).isEmpty)
   }
 }

@@ -28,10 +28,21 @@ class JoinViewSpec extends SparkSpec {
               struct(col("ck"), col("name")).as("after"))
   }
 
-  private def viewRows(st: JoinView.State) =
-    st.view.collect()
+  private def viewRows(view: org.apache.spark.sql.DataFrame) =
+    view.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
                  r.getLong(3), r.getString(4))).toSet
+
+  /** The view after the batches `cuts` splits the events up to `hi` into
+    * — the generic replay with this one maintainer. */
+  private def viewUpTo(l: org.apache.spark.sql.DataFrame,
+                       r: org.apache.spark.sql.DataFrame, hi: Long,
+                       cuts: Seq[Long], lPk: Seq[String], rPk: Seq[String],
+                       fk: Seq[String], cols: Seq[String]) = {
+    val m = JoinView.maintainer(cols)
+    MultiView.replay(l.filter(col("ts") <= hi), r.filter(col("ts") <= hi),
+      cuts, lPk, rPk, fk, Seq(m))(m)
+  }
 
   test("stepwise: inserts, late dimension arrival, updates, deletes") {
     val l = lEvents(
@@ -43,32 +54,17 @@ class JoinViewSpec extends SparkSpec {
       ("insert", 2L, 1L, (20L, "c20")),
       ("insert", 4L, 2L, (10L, "c10")), // LATE: fact referenced it at ts=1
       ("delete", 8L, 3L, (10L, "c10")))
-    def slice(ev: org.apache.spark.sql.DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val emptyL = Materializer.compact(l.limit(0), Seq("k"))
-    val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
-    val emptyView = emptyL.drop(Materializer.MetaCols: _*)
-      .join(emptyR.drop(Materializer.MetaCols: _*), col("fk") === col("ck"))
-      .select(viewCols.map(col): _*)
-    val st0 = JoinView.State(emptyL, emptyR, emptyView)
+    def upTo(hi: Long, cuts: Seq[Long]) =
+      viewUpTo(l, r, hi, cuts, Seq("k"), Seq("ck"), Seq("fk"), viewCols)
     // batch 1 (ts <= 3): both facts + c20 only -> view has just k=2
-    val st1 = JoinView.applyBatch(st0,
-      slice(l, Long.MinValue, 3), slice(r, Long.MinValue, 3),
-      Seq("k"), Seq("ck"), Seq("fk"), viewCols)
-    assert(viewRows(st1) == Set((2L, 20L, 7.0, 20L, "c20")),
+    assert(viewRows(upTo(3, Seq())) == Set((2L, 20L, 7.0, 20L, "c20")),
       "late dimension must NOT appear before its insert arrives")
     // batch 2 (3 < ts <= 6): c10 arrives + k=1 price update -> both rows
-    val st2 = JoinView.applyBatch(st1,
-      slice(l, 3, 6), slice(r, 3, 6), Seq("k"), Seq("ck"), Seq("fk"),
-      viewCols)
-    assert(viewRows(st2) == Set(
+    assert(viewRows(upTo(6, Seq(3L))) == Set(
       (1L, 10L, 6.0, 10L, "c10"), (2L, 20L, 7.0, 20L, "c20")),
       "late dim row must join retroactively with the updated fact")
     // batch 3 (ts > 6): delete c10 and fact k=2 -> empty view
-    val st3 = JoinView.applyBatch(st2,
-      slice(l, 6, Long.MaxValue), slice(r, 6, Long.MaxValue),
-      Seq("k"), Seq("ck"), Seq("fk"), viewCols)
-    assert(viewRows(st3).isEmpty,
+    assert(viewRows(upTo(Long.MaxValue, Seq(3L, 6L))).isEmpty,
       "deletes on either side must remove their view rows")
   }
 
@@ -93,36 +89,21 @@ class JoinViewSpec extends SparkSpec {
       .select(col("op"), col("ts"), col("seq"),
               struct(col("ck1"), col("ck2"), col("name")).as("after"))
     val vCols = Seq("k1", "k2", "fk1", "fk2", "price", "ck1", "ck2", "name")
-    def slice(ev: org.apache.spark.sql.DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val emptyL = Materializer.compact(l.limit(0), Seq("k1", "k2"))
-    val emptyR = Materializer.compact(r.limit(0), Seq("ck1", "ck2"))
-    val emptyView = emptyL.drop(Materializer.MetaCols: _*)
-      .join(emptyR.drop(Materializer.MetaCols: _*),
-            col("fk1") === col("ck1") && col("fk2") === col("ck2"))
-      .select(vCols.map(col): _*)
-    def rows(st: JoinView.State) = st.view.collect()
+    def rows(view: org.apache.spark.sql.DataFrame) = view.collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3),
                  x.getDouble(4), x.getLong(5), x.getLong(6),
                  x.getString(7))).toSet
     val lk = Seq("k1", "k2"); val rk = Seq("ck1", "ck2")
     val fk = Seq("fk1", "fk2")
-    val st0 = JoinView.State(emptyL, emptyR, emptyView)
-    val st1 = JoinView.applyBatch(st0,
-      slice(l, Long.MinValue, 3), slice(r, Long.MinValue, 3),
-      lk, rk, fk, vCols)
-    assert(rows(st1) == Set((1L, 2L, 20L, 2L, 7.0, 20L, 2L, "c20")),
+    def upTo(hi: Long, cuts: Seq[Long]) =
+      viewUpTo(l, r, hi, cuts, lk, rk, fk, vCols)
+    assert(rows(upTo(3, Seq())) == Set((1L, 2L, 20L, 2L, 7.0, 20L, 2L, "c20")),
       "composite late dimension must NOT appear before its insert arrives")
-    val st2 = JoinView.applyBatch(st1, slice(l, 3, 6), slice(r, 3, 6),
-      lk, rk, fk, vCols)
-    assert(rows(st2) == Set(
+    assert(rows(upTo(6, Seq(3L))) == Set(
       (1L, 1L, 10L, 1L, 6.0, 10L, 1L, "c10"),
       (1L, 2L, 20L, 2L, 7.0, 20L, 2L, "c20")),
       "composite late dim row must join retroactively with updated fact")
-    val st3 = JoinView.applyBatch(st2,
-      slice(l, 6, Long.MaxValue), slice(r, 6, Long.MaxValue),
-      lk, rk, fk, vCols)
-    assert(rows(st3).isEmpty,
+    assert(rows(upTo(Long.MaxValue, Seq(3L, 6L))).isEmpty,
       "composite deletes on either side must remove their view rows")
   }
 
@@ -132,12 +113,9 @@ class JoinViewSpec extends SparkSpec {
     // corrupt the key frame or join on the wrong columns
     val l = lEvents(("insert", 1L, 1L, (1L, 10L, 5.0)))
     val r = rEvents(("insert", 2L, 1L, (10L, "c10")))
-    val emptyL = Materializer.compact(l.limit(0), Seq("k"))
-    val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
-    val st = JoinView.State(emptyL, emptyR, emptyL)
     intercept[IllegalArgumentException] {
-      JoinView.applyBatch(st, l, r, Seq("k"), Seq("ck", "fk"),
-        Seq("fk", "price"), viewCols)
+      MultiView.replay(l, r, Seq(), Seq("k"), Seq("ck", "fk"),
+        Seq("fk", "price"), Seq(JoinView.maintainer(viewCols)))
     }
   }
 
@@ -157,13 +135,14 @@ class JoinViewSpec extends SparkSpec {
     })
     probe.start()
     try {
-      val cols = Seq("o_orderkey", "o_custkey", "o_totalprice")
-      val n = JoinView.replay(
+      val m = JoinView.maintainer(
+        Seq("o_orderkey", "o_custkey", "o_totalprice"))
+      val n = MultiView.replay(
         ChangelogGen.ordersChangeEvents(spark, sfDir),
         ChangelogGen.customerChangeEvents(spark, sfDir),
         cuts = Seq(788918400L, 852076800L),
         lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-        lJoinCols = Seq("o_custkey"), viewCols = cols).view.count()
+        lJoinCols = Seq("o_custkey"), maintainers = Seq(m))(m).count()
       assert(n > 0)
     } finally { stop = true; probe.join() }
     assert(!sawMutation, s"parent session's $key was mutated mid-replay")
@@ -173,13 +152,13 @@ class JoinViewSpec extends SparkSpec {
   test("replayed view equals full recompute of the two final states") {
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
                    "o_totalprice", "c_name", "c_acctbal")
-    val incr = JoinView.replay(
+    val m = JoinView.maintainer(cols)
+    val incr = MultiView.replay(
       ChangelogGen.ordersChangeEvents(spark, sfDir),
       ChangelogGen.customerChangeEvents(spark, sfDir),
       cuts = Seq(788918400L, 852076800L),
       lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-      lJoinCols = Seq("o_custkey"),
-      viewCols = cols).view
+      lJoinCols = Seq("o_custkey"), maintainers = Seq(m))(m)
     val full = ChangelogGen.ordersState(spark, sfDir)
       .join(ChangelogGen.customerState(spark, sfDir),
             col("o_custkey") === col("c_custkey"))
@@ -195,13 +174,16 @@ class JoinViewSpec extends SparkSpec {
     // maintainers must degrade to cluster-side key handling — and the
     // view must come out identical to the driver-local path
     val cols = Seq("o_orderkey", "o_custkey", "o_totalprice", "c_name")
-    def run(cap: Int) = JoinView.replay(
-      ChangelogGen.ordersChangeEvents(spark, sfDir),
-      ChangelogGen.customerChangeEvents(spark, sfDir),
-      cuts = Seq(),
-      lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-      lJoinCols = Seq("o_custkey"), viewCols = cols,
-      maxLocalKeys = cap).view
+    def run(cap: Int) = {
+      val m = JoinView.maintainer(cols)
+      MultiView.replay(
+        ChangelogGen.ordersChangeEvents(spark, sfDir),
+        ChangelogGen.customerChangeEvents(spark, sfDir),
+        cuts = Seq(),
+        lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
+        lJoinCols = Seq("o_custkey"), maintainers = Seq(m),
+        maxLocalKeys = cap)(m)
+    }
     val fallback = run(1)
     val local = run(JoinView.DefaultMaxLocalKeys)
     assert(fallback.count() > 0, "fallback view is empty — test data broken")

@@ -30,26 +30,17 @@ class LeftJoinViewSpec extends SparkSpec {
 
   private val viewCols = Seq("k", "fk", "price", "name")
 
-  private def emptyState(l: DataFrame, r: DataFrame) = {
-    val emptyL = Materializer.compact(l.limit(0), Seq("k"))
-    val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
-    LeftJoinView.State(emptyL, emptyR, LeftJoinView.directView(
-      emptyL.drop(Materializer.MetaCols: _*),
-      emptyR.drop(Materializer.MetaCols: _*),
-      Seq("ck"), Seq("fk"), viewCols).limit(0))
-  }
-
-  private def step(st: LeftJoinView.State, l: DataFrame, r: DataFrame,
-                   lo: Long, hi: Long,
+  /** The view after the batches `cuts` splits the events up to `hi` into
+    * — the generic replay with this one maintainer. */
+  private def upTo(l: DataFrame, r: DataFrame, hi: Long, cuts: Seq[Long],
                    cap: Int = JoinView.DefaultMaxLocalKeys) = {
-    def slice(ev: DataFrame) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    LeftJoinView.applyBatch(st, slice(l), slice(r),
-      Seq("k"), Seq("ck"), Seq("fk"), viewCols, maxLocalKeys = cap)
+    val m = LeftJoinView.maintainer(viewCols)
+    MultiView.replay(l.filter(col("ts") <= hi), r.filter(col("ts") <= hi),
+      cuts, Seq("k"), Seq("ck"), Seq("fk"), Seq(m), maxLocalKeys = cap)(m)
   }
 
-  private def rows(st: LeftJoinView.State) =
-    st.view.collect()
+  private def rows(view: DataFrame) =
+    view.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
                  Option(r.getString(3)))).toSet
 
@@ -61,14 +52,14 @@ class LeftJoinViewSpec extends SparkSpec {
       ("insert", 1L, 1L, (20L, "b")),
       ("insert", 4L, 2L, (10L, "a")),   // LATE: fact 1 padded until now
       ("delete", 8L, 3L, (20L, "b")))   // fact 2's dim dies -> re-pad
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(rows(st1) == Set((1L, 10L, 5.0, None), (2L, 20L, 7.0, Some("b"))),
       "a fact with no dimension must appear NULL-padded, not vanish")
-    val st2 = step(st1, l, r, 3, 6)
+    val st2 = upTo(l, r, 6, Seq(3L))
     assert(rows(st2) == Set((1L, 10L, 5.0, Some("a")),
                             (2L, 20L, 7.0, Some("b"))),
       "the dim's arrival must RETRACT the pad row and join the fact")
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(3L, 6L))
     assert(rows(st3) == Set((1L, 10L, 5.0, Some("a")), (2L, 20L, 7.0, None)),
       "the dim's death must re-pad its facts, not drop them")
   }
@@ -80,11 +71,11 @@ class LeftJoinViewSpec extends SparkSpec {
       ("update", 5L, 3L, (1L, 10L, 6.0)),
       ("delete", 9L, 4L, (2L, 99L, 7.0)))  // padded row deleted
     val r = rEvents(("insert", 1L, 1L, (10L, "a")))
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(rows(st1) == Set((1L, 10L, 5.0, Some("a")), (2L, 99L, 7.0, None)))
-    val st2 = step(st1, l, r, 3, 6)
+    val st2 = upTo(l, r, 6, Seq(3L))
     assert(rows(st2) == Set((1L, 10L, 6.0, Some("a")), (2L, 99L, 7.0, None)))
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(3L, 6L))
     assert(rows(st3) == Set((1L, 10L, 6.0, Some("a"))),
       "deleting a padded fact must remove its pad row")
   }
@@ -95,12 +86,12 @@ class LeftJoinViewSpec extends SparkSpec {
       ("update", 4L, 2L, (1L, 20L, 5.0)),   // retarget to missing dim
       ("update", 8L, 3L, (1L, 10L, 5.0)))   // back to the live one
     val r = rEvents(("insert", 1L, 1L, (10L, "a")))
-    val st1 = step(emptyState(l, r), l, r, Long.MinValue, 3)
+    val st1 = upTo(l, r, 3, Seq())
     assert(rows(st1) == Set((1L, 10L, 5.0, Some("a"))))
-    val st2 = step(st1, l, r, 3, 6)
+    val st2 = upTo(l, r, 6, Seq(3L))
     assert(rows(st2) == Set((1L, 20L, 5.0, None)),
       "retargeting to an absent dim must swap the joined row for a pad")
-    val st3 = step(st2, l, r, 6, Long.MaxValue)
+    val st3 = upTo(l, r, Long.MaxValue, Seq(3L, 6L))
     assert(rows(st3) == Set((1L, 10L, 5.0, Some("a"))))
   }
 
@@ -113,12 +104,7 @@ class LeftJoinViewSpec extends SparkSpec {
     val r = rEvents(
       ("insert", 4L, 1L, (10L, "a")),
       ("delete", 8L, 2L, (10L, "a")))
-    def runWith(cap: Int) = {
-      val bounds = Seq((Long.MinValue, 3L), (3L, 6L), (6L, Long.MaxValue))
-      bounds.foldLeft(emptyState(l, r)) { case (st, (lo, hi)) =>
-        step(st, l, r, lo, hi, cap = cap)
-      }
-    }
+    def runWith(cap: Int) = upTo(l, r, Long.MaxValue, Seq(3L, 6L), cap)
     assert(rows(runWith(0)) == rows(runWith(100000)),
       "over-cap distributed fallback diverges from the broadcast path")
   }
@@ -140,13 +126,16 @@ class LeftJoinViewSpec extends SparkSpec {
               struct(col("ck"), col("name")).as("after"))
     val emptyL = Materializer.compact(l.limit(0), Seq("k"))
     val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
-    val st = LeftJoinView.applyBatch(
-      LeftJoinView.State(emptyL, emptyR, LeftJoinView.directView(
+    // one step: the shared batch ctx plus this maintainer's fold
+    val (ctx, _, _) = MultiView.batchCtx(emptyL, emptyR, l, r, Seq("k"),
+      Seq("ck"), Seq("fk"), keys = None,
+      maxLocalKeys = JoinView.DefaultMaxLocalKeys)
+    val st = LeftJoinView.maintainer(viewCols).step(
+      LeftJoinView.directView(
         emptyL.drop(Materializer.MetaCols: _*),
         emptyR.drop(Materializer.MetaCols: _*),
-        Seq("ck"), Seq("fk"), viewCols).limit(0)),
-      l, r, Seq("k"), Seq("ck"), Seq("fk"), viewCols)
-    val plan = st.view.queryExecution.executedPlan.toString
+        Seq("ck"), Seq("fk"), viewCols).limit(0), ctx)
+    val plan = st.queryExecution.executedPlan.toString
     // the outer-join decomposition must keep every state-side join
     // broadcast-from-the-delta-side: no sort-merge join, no hash
     // exchange of a state table anywhere in the maintenance path (the
@@ -163,26 +152,26 @@ class LeftJoinViewSpec extends SparkSpec {
   }
 
   test("replay over the synthesized changelogs equals the direct recompute") {
-    val fin = LeftJoinView.replay(
+    val m = LeftJoinView.maintainer(Seq("o_orderkey", "o_custkey",
+      "o_totalprice", "c_name", "c_acctbal"))
+    val view = MultiView.replay(
       ChangelogGen.ordersChangeEvents(spark, sfDir),
       ChangelogGen.customerChangeEvents(spark, sfDir),
       cuts = Seq(788918400L, 852076800L),
       lPk = Seq("o_orderkey"), rPk = Seq("c_custkey"),
-      lJoinCols = Seq("o_custkey"),
-      viewCols = Seq("o_orderkey", "o_custkey", "o_totalprice",
-                     "c_name", "c_acctbal"))
+      lJoinCols = Seq("o_custkey"), maintainers = Seq(m))(m)
     val direct = LeftJoinView.directView(
       ChangelogGen.ordersState(spark, sfDir),
       ChangelogGen.customerState(spark, sfDir),
       Seq("c_custkey"), Seq("o_custkey"),
       Seq("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_acctbal"))
-    assert(fin.view.count() > 0)
+    assert(view.count() > 0)
     // the outer view must be STRICTLY bigger than the inner one at this
     // data: customers %25==0 are deleted, their orders padded
-    assert(fin.view.filter(col("c_name").isNull).count() > 0,
+    assert(view.filter(col("c_name").isNull).count() > 0,
       "expected NULL-padded orders (deleted customers) in the outer view")
-    assert(fin.view.exceptAll(direct).isEmpty &&
-           direct.exceptAll(fin.view).isEmpty,
+    assert(view.exceptAll(direct).isEmpty &&
+           direct.exceptAll(view).isEmpty,
       "maintained left-outer view diverges from direct recompute")
   }
 }

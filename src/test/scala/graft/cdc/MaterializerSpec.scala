@@ -96,7 +96,7 @@ class MaterializerSpec extends SparkSpec {
       .select(col("op"), col("ts"), col("seq"),
         struct(col("key"), col("value")).as("after"))
     val state = Materializer.compact(toDf(ops), Seq("key")).localCheckpoint()
-    // pre-collected LocalRelation keys, as JoinView.applyBatch passes them
+    // pre-collected LocalRelation keys, as MultiView.batchCtx passes them
     // (otherwise the key-distinct adds its own — |Δ|-bounded — exchanges)
     val ck = spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row(7L),
@@ -134,10 +134,12 @@ class MaterializerSpec extends SparkSpec {
     val emptyView = emptyL.drop(Materializer.MetaCols: _*)
       .join(emptyR.drop(Materializer.MetaCols: _*), col("fk") === col("ck"))
       .select(viewCols.map(col): _*)
-    val st = JoinView.applyBatch(
-      JoinView.State(emptyL, emptyR, emptyView), l, r,
-      Seq("k"), Seq("ck"), Seq("fk"), viewCols)
-    val plan = st.view.queryExecution.executedPlan.toString
+    // one step: the shared batch ctx plus the join view's fold
+    val (ctx, _, _) = MultiView.batchCtx(emptyL, emptyR, l, r, Seq("k"),
+      Seq("ck"), Seq("fk"), keys = None,
+      maxLocalKeys = JoinView.DefaultMaxLocalKeys)
+    val view = JoinView.maintainer(viewCols).step(emptyView, ctx)
+    val plan = view.queryExecution.executedPlan.toString
     // keep is anti-joined against broadcast key sets and both rebuild
     // joins broadcast their |Δ|-bounded side: the view maintenance path
     // must not exchange EITHER state table

@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared multi-view maintenance: every view fanned off ONE MultiView
-  * replay must equal its own standalone replay over the same changelogs
-  * (same cuts, same configs) — the fan-out only removes duplicated
-  * per-batch work, never changes a view's semantics. */
+  * replay must equal its own single-maintainer replay over the same
+  * changelogs (same cuts, same configs) and the direct recompute over
+  * the final states — the fan-out only removes duplicated per-batch
+  * work, never changes a view's semantics. */
 class MultiViewSpec extends SparkSpec {
 
   private val cuts = Seq(788918400L, 852076800L) // CdcQueries' snap times
@@ -39,47 +40,74 @@ class MultiViewSpec extends SparkSpec {
     val res = MultiView.replay(lEv, rEv, cuts, lPk, rPk, fk,
       maintainers = Seq(mJoin, mLeft, mAgg, mDist))
 
+    // each view alone: a single-maintainer replay over the same cuts
+    def solo[S](m: MultiView.Maintainer[S]): (S, MultiView.Result) = {
+      val r = MultiView.replay(lEv, rEv, cuts, lPk, rPk, fk, Seq(m))
+      (r(m), r)
+    }
+    // the direct recomputes run over the fanned replay's final states
+    val liveL = Materializer.liveView(res.left)
+    val liveR = Materializer.liveView(res.right)
+    val joined = liveL.join(liveR, col("o_custkey") === col("c_custkey"))
+
     // inner join view (projection of the union-column maintained view)
-    val soloJoin = JoinView.replay(lEv, rEv, cuts, lPk, rPk, fk, innerCols)
+    val (soloJoin, soloJoinRes) = solo(JoinView.maintainer(innerCols))
     assert(rowsOf(res(mJoin)._1.select(innerCols.map(col): _*)) ==
-             rowsOf(soloJoin.view),
-      "fanned inner view != standalone JoinView.replay")
+             rowsOf(soloJoin),
+      "fanned inner view != single-maintainer replay")
+    assert(rowsOf(soloJoin) == rowsOf(joined.select(innerCols.map(col): _*)),
+      "inner view != direct recompute over final states")
 
     // ranked top-k over the join
-    val soloTopK = JoinTopKView.replay(lEv, rEv, cuts, lPk, rPk, fk,
-      unionCols, "c_nationkey", "o_totalprice", k = 3)
-    assert(rowsOf(res(mJoin)._2) == rowsOf(soloTopK.ranked),
-      "fanned top-k != standalone JoinTopKView.replay")
+    val (soloTopK, _) = solo(JoinTopKView.maintainer(unionCols,
+      "c_nationkey", "o_totalprice", k = 3))
+    assert(rowsOf(res(mJoin)._2) == rowsOf(soloTopK._2),
+      "fanned top-k != single-maintainer replay")
+    assert(rowsOf(soloTopK._2) == rowsOf(IncrementalTopK.topK(
+        joined.select(unionCols.map(col): _*), lPk, "c_nationkey",
+        "o_totalprice", 3)),
+      "top-k != direct recompute over final states")
 
     // left-outer view
-    val soloLeft = LeftJoinView.replay(lEv, rEv, cuts, lPk, rPk, fk,
-                                       innerCols)
-    assert(rowsOf(res(mLeft)) == rowsOf(soloLeft.view),
-      "fanned left view != standalone LeftJoinView.replay")
+    val (soloLeft, _) = solo(LeftJoinView.maintainer(innerCols))
+    assert(rowsOf(res(mLeft)) == rowsOf(soloLeft),
+      "fanned left view != single-maintainer replay")
+    assert(rowsOf(soloLeft) ==
+             rowsOf(LeftJoinView.directView(liveL, liveR, rPk, fk,
+                                            innerCols)),
+      "left view != direct recompute over final states")
 
     // multi-measure aggregate
-    val soloAgg = JoinAggView.replayNamed(lEv, rEv, cuts, lPk, rPk, fk,
-      Seq("c_nationkey"),
-      Seq(("o_totalprice", "o_totalprice", dec),
-          ("c_acctbal", "c_acctbal", dec)))
-    assert(rowsOf(res(mAgg)) == rowsOf(soloAgg.agg),
-      "fanned aggregate != standalone JoinAggView.replayNamed")
+    val measures = Seq(("o_totalprice", "o_totalprice", dec),
+                       ("c_acctbal", "c_acctbal", dec))
+    val (soloAgg, _) = solo(JoinAggView.maintainerNamed(Seq("c_nationkey"),
+                                                        measures))
+    assert(rowsOf(res(mAgg)) == rowsOf(soloAgg),
+      "fanned aggregate != single-maintainer replay")
+    assert(rowsOf(soloAgg) == rowsOf(JoinAggView.directAggNamed(
+        liveL, liveR, rPk, fk, Seq("c_nationkey"), measures)),
+      "aggregate != direct recompute over final states")
 
     // pair state (count-distinct face; the same state serves min/max
     // and percentiles, so the view equality covers all three)
-    val soloDist = JoinDistinctView.replay(lEv, rEv, cuts, lPk, rPk, fk,
-      "c_nationkey", "o_custkey")
-    val fanned = JoinDistinctView.State(res.left, res.right,
-                                        res(mDist)._1, res(mDist)._2)
-    assert(rowsOf(JoinDistinctView.view(fanned, "c_nationkey", "o_custkey"))
-             == rowsOf(JoinDistinctView.view(soloDist, "c_nationkey",
-                                             "o_custkey")),
-      "fanned distinct view != standalone JoinDistinctView.replay")
+    val (soloDist, soloDistRes) =
+      solo(JoinDistinctView.maintainer("c_nationkey", "o_custkey"))
+    def distinctView(l: DataFrame, r: DataFrame,
+                     st: (DataFrame, DataFrame)) =
+      JoinDistinctView.view(JoinDistinctView.State(l, r, st._1, st._2),
+                            "c_nationkey", "o_custkey")
+    val fannedDist = rowsOf(distinctView(res.left, res.right, res(mDist)))
+    assert(fannedDist == rowsOf(distinctView(soloDistRes.left,
+                                             soloDistRes.right, soloDist)),
+      "fanned distinct view != single-maintainer replay")
+    assert(fannedDist == rowsOf(joined.groupBy(col("c_nationkey"))
+        .agg(countDistinct(col("o_custkey")).as("n_distinct_o_custkey"))),
+      "distinct view != direct recompute over final states")
 
-    // shared table states equal the standalone replay's
-    assert(rowsOf(res.left) == rowsOf(soloJoin.left) &&
-             rowsOf(res.right) == rowsOf(soloJoin.right),
-      "shared L/R states != standalone replay states")
+    // shared table states equal the single-maintainer replay's
+    assert(rowsOf(res.left) == rowsOf(soloJoinRes.left) &&
+             rowsOf(res.right) == rowsOf(soloJoinRes.right),
+      "shared L/R states != single-maintainer replay states")
   }
 
   test("auto-cut backlog == manual cuts == one giant batch") {

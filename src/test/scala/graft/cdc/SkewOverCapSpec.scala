@@ -52,9 +52,12 @@ class SkewOverCapSpec extends SparkSpec {
   test("planted hot key: over-cap salted fallback matches the local path") {
     val l = hotFacts(1200, dims = 40)
     val r = dimEvents(40)
-    def run(cap: Int) = JoinView.replay(l, r, cuts = Seq(1L, 2L),
-      lPk = Seq("k"), rPk = Seq("ck"), lJoinCols = Seq("fk"),
-      viewCols = viewCols, maxLocalKeys = cap).view
+    def run(cap: Int) = {
+      val m = JoinView.maintainer(viewCols)
+      MultiView.replay(l, r, cuts = Seq(1L, 2L),
+        lPk = Seq("k"), rPk = Seq("ck"), lJoinCols = Seq("fk"),
+        maintainers = Seq(m), maxLocalKeys = cap)(m)
+    }
     val salted = run(1) // every key set blows the cap -> distributed+salted
     val local = run(JoinView.DefaultMaxLocalKeys)
     assert(salted.count() > 0, "hot-key view is empty — generator broken")

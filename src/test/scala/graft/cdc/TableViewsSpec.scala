@@ -25,11 +25,12 @@ class TableViewsSpec extends SparkSpec {
       "o_totalprice", _.cast("decimal(18,8)"))
     val res = TableViews.replay(ev, cuts, pk, Seq(mTopK, mDist, mMom))
 
-    // top-k: equals the standalone replay with the same cuts
-    val soloTopK = IncrementalTopK.replay(ev, cuts, pk,
-      "o_orderstatus", "o_totalprice", k = 3)
+    // top-k: equals a single-maintainer replay with the same cuts
+    val mSolo = IncrementalTopK.maintainer("o_orderstatus",
+                                           "o_totalprice", k = 3)
+    val soloTopK = TableViews.replay(ev, cuts, pk, Seq(mSolo))(mSolo)
     assert(rowsOf(res(mTopK)) == rowsOf(soloTopK),
-      "fanned top-k != standalone IncrementalTopK.replay")
+      "fanned top-k != single-maintainer replay")
 
     // count-distinct: the batched fold equals the one-shot fold
     val fanned = IncrementalAgg.distinctCountView(res(mDist),

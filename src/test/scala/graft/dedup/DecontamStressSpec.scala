@@ -84,17 +84,14 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
              concat(lit("probe v3 "), docText(col("id"))).as("text"))
         .as("after"))
 
-  /** Replay a corpus × the fixed registry, force everything, then
-    * measure one more batch on the given side. `gramOverCap` drives
-    * the release probe down the OVER-CAP gram path: the doc-side key
-    * set is pinned empty-local (no doc churn — the release premise)
-    * while maxLocalKeys=1 forces every derived gram frame past the
-    * broadcast cap, so the probe exercises bloom-prune + salted semi
-    * instead of exact broadcast. */
-  private def replayAndProbe(n: Long, probeDocs: Boolean,
-                             gramOverCap: Boolean = false)
-      : (Long, (Long, Long)) = {
-    import spark.implicits._
+  /** One corpus × the fixed registry, replayed and forced: the final
+    * result, its maintainer, and the live doc count. */
+  private final class Replayed(
+      val res: MultiView.Result,
+      val m: MultiView.Maintainer[DecontamView.DecontamState],
+      val live: Long)
+
+  private def replay(n: Long): Replayed = {
     val m = DecontamView.maintainer("text", "text")
     val res = MultiView.replay(docLog(n), benchLog(),
       cuts = (1L to 13L),
@@ -103,6 +100,27 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
     val live = Materializer.liveView(res.left).count()
     val st = res(m)
     st.docGrams.count(); st.benchGrams.count(); st.contam.count()
+    new Replayed(res, m, live)
+  }
+
+  // The replay depends only on the corpus size, so each is built once
+  // per suite and shared by every probe: `step` returns a NEW state and
+  // `batchCtx` new merged states, so the probes stay independent.
+  private lazy val replayed1x = replay(5000L)
+  private lazy val replayed10x = replay(50000L)
+
+  /** Measure one more batch on the given side over a shared replay.
+    * `gramOverCap` drives the release probe down the OVER-CAP gram
+    * path: the doc-side key set is pinned empty-local (no doc churn —
+    * the release premise) while maxLocalKeys=1 forces every derived
+    * gram frame past the broadcast cap, so the probe exercises
+    * bloom-prune + salted semi instead of exact broadcast. */
+  private def replayAndProbe(r: Replayed, probeDocs: Boolean,
+                             gramOverCap: Boolean = false)
+      : (Long, (Long, Long)) = {
+    import spark.implicits._
+    import r.{live, m, res}
+    val st = res(m)
     val (dl, bl) =
       if (probeDocs) (docProbe(), benchProbe().limit(0))
       else (docProbe().limit(0), benchProbe())
@@ -121,8 +139,8 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
   }
 
   test("a new eval release is |Δ|×|bench|-bounded, not corpus-sized") {
-    val (live1x, (tot1x, _)) = replayAndProbe(5000L, probeDocs = false)
-    val (live10x, (tot10x, max10x)) = replayAndProbe(50000L,
+    val (live1x, (tot1x, _)) = replayAndProbe(replayed1x, probeDocs = false)
+    val (live10x, (tot10x, max10x)) = replayAndProbe(replayed10x,
                                                      probeDocs = false)
     assert(live10x > 9 * live1x, "10x corpus did not materialize")
     assert(max10x < live10x,
@@ -142,9 +160,9 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
     // bloom-prune the corpus-sized gram index scan-side — a plain
     // salted semi would exchange the whole index, shuffle growing
     // linearly in the corpus
-    val (_, (tot1x, _)) = replayAndProbe(5000L, probeDocs = false,
+    val (_, (tot1x, _)) = replayAndProbe(replayed1x, probeDocs = false,
                                          gramOverCap = true)
-    val (live10x, (tot10x, max10x)) = replayAndProbe(50000L,
+    val (live10x, (tot10x, max10x)) = replayAndProbe(replayed10x,
       probeDocs = false, gramOverCap = true)
     assert(max10x < live10x,
       s"an over-cap release-probe stage shuffled $max10x records on " +
@@ -159,8 +177,8 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
   }
 
   test("a corpus re-crawl batch is |Δ|×|bench|-bounded too") {
-    val (_, (tot1x, _)) = replayAndProbe(5000L, probeDocs = true)
-    val (live10x, (tot10x, max10x)) = replayAndProbe(50000L,
+    val (_, (tot1x, _)) = replayAndProbe(replayed1x, probeDocs = true)
+    val (live10x, (tot10x, max10x)) = replayAndProbe(replayed10x,
                                                      probeDocs = true)
     assert(max10x < live10x && tot10x < live10x,
       s"doc-probe shuffle ($tot10x total, $max10x max-stage) is " +

@@ -19,7 +19,9 @@ class CompactionSpec extends SparkSpec {
   test("compacted changelog folds identically; guards fire behind the horizon") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("cplog")
-    val root = tmpDir("cpstate")
+    val stateRoot = tmpDir("cpstate")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("cpckpt")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -29,9 +31,10 @@ class CompactionSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt).awaitTermination()
     def at(b: Long): Map[String, Long] =
       CdcStream.viewAsOfBatch(spark, root, b).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -90,7 +93,9 @@ class CompactionSpec extends SparkSpec {
   test("crash between side commit and dst swap self-heals; snapshot is multi-file") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("cwlog")
-    val root = tmpDir("cwstate")
+    val stateRoot = tmpDir("cwstate")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("cwckpt")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -100,9 +105,10 @@ class CompactionSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt).awaitTermination()
     def at(b: Long): Map[String, Long] =
       CdcStream.viewAsOfBatch(spark, root, b).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -166,7 +172,9 @@ class CompactionSpec extends SparkSpec {
   test("stranded side below an advanced horizon is dropped, not installed") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("cslog")
-    val root = tmpDir("csstate")
+    val stateRoot = tmpDir("csstate")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("csckpt")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -176,9 +184,10 @@ class CompactionSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt).awaitTermination()
     def at(b: Long): Map[String, Long] =
       CdcStream.viewAsOfBatch(spark, root, b).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -215,7 +224,9 @@ class CompactionSpec extends SparkSpec {
   test("compactIfNeeded: threshold policy bounds the log, fold stays exact") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("cplog2")
-    val root = tmpDir("cpstate2")
+    val stateRoot = tmpDir("cpstate2")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("cpckpt2")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -225,9 +236,10 @@ class CompactionSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt).awaitTermination()
     def at(b: Long): Map[String, Long] =
       CdcStream.viewAsOfBatch(spark, root, b).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -265,7 +277,9 @@ class CompactionSpec extends SparkSpec {
   test("producer with retention keeps its own changelog bounded") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("crlog")
-    val root = tmpDir("crstate")
+    val stateRoot = tmpDir("crstate")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("crckpt")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -277,9 +291,10 @@ class CompactionSpec extends SparkSpec {
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     // the PRODUCTION wiring: the producer itself runs the retention
     // policy after every swap — no operator calls compaction
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt,
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt,
       retention = Some((2, 4))).awaitTermination()
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -314,7 +329,9 @@ class CompactionSpec extends SparkSpec {
   test("JDBC incremental apply refuses a snapshot inside its unapplied range") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("cpjlog")
-    val root = tmpDir("cpjstate")
+    val stateRoot = tmpDir("cpjstate")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("cpjckpt")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -324,9 +341,10 @@ class CompactionSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt).awaitTermination()
     val url = s"jdbc:derby:${tmpDir("cpjderby")}/graftdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
@@ -360,7 +378,9 @@ class CompactionSpec extends SparkSpec {
     // guard's job.
     import org.apache.spark.sql.types._
     val logDir = tmpDir("mslog")
-    val root = tmpDir("msstate")
+    val stateRoot = tmpDir("msstate")
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/dc"
     val ckpt = tmpDir("msckpt")
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -370,9 +390,10 @@ class CompactionSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      stateRoot, ckpt).awaitTermination()
     def at(b: Long): Map[String, Long] =
       CdcStream.viewAsOfBatch(spark, root, b).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -42,7 +42,9 @@ class JdbcSinkSpec extends SparkSpec {
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
     val logDir = Files.createTempDirectory("jvslog").toString
-    val root = Files.createTempDirectory("jvsroot").toString
+    val stateRoot = Files.createTempDirectory("jvsroot").toString
+    // the table runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/topk"
     val ckpt = Files.createTempDirectory("jvsckpt").toString
     val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType),
@@ -52,17 +54,17 @@ class JdbcSinkSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainTopKToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", orderCol = "v", k = 2, root, ckpt)
-      .awaitTermination()
+      Seq(CdcStream.NamedTableView.topK("topk", "grp", "v", 2)),
+      stateRoot, ckpt).awaitTermination()
     def served(): Set[(String, Int, Long, Double)] =
       spark.read.jdbc(url, "topk_view", props)
         .select(col("grp"), col("rk"), col("id"), col("v")).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
                    r.getDouble(3))).toSet
     def viewNow(): Set[(String, Int, Long, Double)] =
-      CdcStream.readTopKView(spark, root)
+      CdcStream.readMultiView(spark, stateRoot, "topk")
         .select(col("grp"), col("rk"), col("id"), col("v")).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
                    r.getDouble(3))).toSet

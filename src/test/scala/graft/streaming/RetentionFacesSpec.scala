@@ -178,14 +178,16 @@ class RetentionFacesSpec extends SparkSpec {
     append("b8.json", Seq(dim2("delete", 80, 200, "AS")))
     run()
     foldEqualsFace(s"$root/snow",
-      CdcStream.readSnowflakeView(spark, root, "snow"), "snow")
+      CdcStream.readMultiView(spark, root, "snow"), "snow")
     refusesBehindHorizon(s"$root/snow")
   }
 
   test("join face with retention: single-root log bounded, fold exact") {
     import org.apache.spark.sql.types._
     val logDir = tmpDir("rjvlog")
-    val root = tmpDir("rjvstate")
+    val stateRoot = tmpDir("rjvstate")
+    // the multi-view runner's root; the view's own changelog lives under it
+    val root = s"$stateRoot/jv"
     val ckpt = tmpDir("rjvckpt")
     val lSpec = TableSpec("d", "fact", Seq("k"), StructType(Seq(
       StructField("k", LongType), StructField("fk", LongType),
@@ -199,10 +201,11 @@ class RetentionFacesSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainJoinViewToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec, Seq("fk"),
-      Seq("k", "fk", "price", "ck", "grp"), root, ckpt,
-      retention = Some((1, 3))).awaitTermination()
+      Seq(CdcStream.NamedView.joinView("jv",
+        Seq("k", "fk", "price", "ck", "grp"), Seq("k"))),
+      stateRoot, ckpt, retention = Some((1, 3))).awaitTermination()
 
     append("b1.json", Seq(dim("insert", 1, 10, "a")))
     run()
@@ -215,7 +218,8 @@ class RetentionFacesSpec extends SparkSpec {
     }
     append("b8.json", Seq(fact("delete", 80, 3, 10, 3.0)))
     run()
-    foldEqualsFace(root, CdcStream.readJoinView(spark, root), "join view")
+    foldEqualsFace(root, CdcStream.readMultiView(spark, stateRoot, "jv"),
+                   "join view")
     refusesBehindHorizon(root)
   }
 

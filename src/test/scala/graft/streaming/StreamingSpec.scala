@@ -530,13 +530,14 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainJoinViewToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
       lJoinCols = Seq("fk"),
-      viewCols = Seq("k", "fk", "price", "ck", "name"),
+      Seq(CdcStream.NamedView.joinView("jv",
+        Seq("k", "fk", "price", "ck", "name"), Seq("k"))),
       root, ckpt).awaitTermination()
     def view(): Set[(Long, Long, Double, Long, String)] =
-      CdcStream.readJoinView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "jv").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
                    r.getLong(3), r.getString(4))).toSet
     // batch 1: both facts + dim c20 only -> view has just k=2; the fact
@@ -727,11 +728,11 @@ class StreamingSpec extends SparkSpec {
       fks = Seq(Seq("fk"), Seq("nk")), views, root, ckpt)
       .awaitTermination()
     def snow(): Set[(Long, Double, String, String)] =
-      CdcStream.readSnowflakeView(spark, root, "snow").collect()
+      CdcStream.readMultiView(spark, root, "snow").collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[Double]("price"),
                    r.getAs[String]("name"), r.getAs[String]("region"))).toSet
     def rev(): Set[(String, Long, Double)] =
-      CdcStream.readSnowflakeView(spark, root, "rev").collect()
+      CdcStream.readMultiView(spark, root, "rev").collect()
         .map(r => (r.getAs[String]("region"), r.getAs[Long]("n_rows"),
                    r.getAs[java.math.BigDecimal]("sum_price")
                      .doubleValue())).toSet
@@ -761,7 +762,7 @@ class StreamingSpec extends SparkSpec {
     // every view's OWN changelog folds back to its face
     Seq("snow", "rev").foreach { n =>
       val folded = CdcStream.viewAsOfBatch(spark, s"$root/$n", Long.MaxValue)
-      val face = CdcStream.readSnowflakeView(spark, root, n)
+      val face = CdcStream.readMultiView(spark, root, n)
       assert(folded.collect().map(_.toString).toSet ==
                face.collect().map(_.toString).toSet,
         s"changelog fold != face for view '$n'")
@@ -1068,13 +1069,14 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainLeftJoinViewToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
       lJoinCols = Seq("fk"),
-      viewCols = Seq("k", "fk", "price", "name"),
+      Seq(CdcStream.NamedView.leftJoinView("lj",
+        Seq("k", "fk", "price", "name"), Seq("k"))),
       root, ckpt).awaitTermination()
     def view(): Set[(Long, Long, Double, Option[String])] =
-      CdcStream.readJoinView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "lj").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
                    Option(r.getString(3)))).toSet
     // batch 1: both facts visible — k=1's dim is missing, so PADDED
@@ -1119,10 +1121,11 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainJoinViewToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
       lJoinCols = Seq("fk"),
-      viewCols = Seq("k", "fk", "price", "nk", "name"),
+      Seq(CdcStream.NamedView.joinView("jv",
+        Seq("k", "fk", "price", "nk", "name"), Seq("k"))),
       root, ckpt).awaitTermination()
     // three level-1 batches: late dim, price update, dim death
     append("b1.json", Seq(
@@ -1140,7 +1143,7 @@ class StreamingSpec extends SparkSpec {
     // JoinView against dim2 — a maintained 3-table snowflake view built
     // entirely from derived-topic subscription, never re-reading level 1
     val events1 = CdcStream.changelogAsEvents(
-      CdcStream.readViewChanges(spark, root))
+      CdcStream.readViewChanges(spark, s"$root/jv"))
     import spark.implicits._
     val dim2Events = Seq(
       (("insert"), 0L, 1L, (200L, "AS")),
@@ -1150,10 +1153,11 @@ class StreamingSpec extends SparkSpec {
       .select(col("op"), col("ts"), col("seq"),
               struct(col("nkey"), col("region")).as("after"))
     // replay windows aligned to the level-1 batch ids riding in `ts`
-    val fin = JoinView.replay(events1, dim2Events, cuts = Seq(0L, 1L),
-      lPk = Seq("k"), rPk = Seq("nkey"), lJoinCols = Seq("nk"),
-      viewCols = Seq("k", "price", "name", "nk", "region"))
-    val got = fin.view.collect()
+    val level2 = JoinView.maintainer(Seq("k", "price", "name", "nk", "region"))
+    val fin = graft.cdc.MultiView.replay(events1, dim2Events,
+      cuts = Seq(0L, 1L), lPk = Seq("k"), rPk = Seq("nkey"),
+      lJoinCols = Seq("nk"), maintainers = Seq(level2))
+    val got = fin(level2).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
                  r.getLong(3), r.getString(4))).toSet
     assert(got == Set((1L, 6.0, "a", 100L, "EU")),
@@ -1201,12 +1205,14 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainJoinAggToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
-      lJoinCols = Seq("fk"), groupCols = Seq("grp"), valueCol = "price",
-      root, ckpt, valueCast = _.cast("decimal(18,6)")).awaitTermination()
+      lJoinCols = Seq("fk"),
+      Seq(CdcStream.NamedView.joinAgg("ja", Seq("grp"),
+        Seq(("price", "price", _.cast("decimal(18,6)"))))),
+      root, ckpt).awaitTermination()
     def view(): Map[String, (Long, Double)] =
-      CdcStream.readJoinAggView(spark, root, "price").collect()
+      CdcStream.readMultiView(spark, root, "ja").collect()
         .map(r => r.getString(0) ->
           ((r.getLong(1), r.getDecimal(2).doubleValue))).toMap
     // batch 1: two facts + dim 20 only -> only group b counted; the fact
@@ -1249,12 +1255,13 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainJoinDistinctToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
-      lJoinCols = Seq("fk"), groupCol = "grp", valueCol = "fk",
+      lJoinCols = Seq("fk"),
+      Seq(CdcStream.NamedView.joinDistinct("jd", "grp", "fk")),
       root, ckpt).awaitTermination()
     def view(): Map[String, Long] =
-      CdcStream.readDistinctCountView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "jd").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     // batch 1: customer 10 holds TWO orders, 20 holds one
     append("b1.json", Seq(
@@ -1289,12 +1296,12 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainTopKToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", orderCol = "v", k = 2, root, ckpt)
+      Seq(CdcStream.NamedTableView.topK("tk", "grp", "v", 2)), root, ckpt)
       .awaitTermination()
     def view(): Set[(String, Int, Long)] =
-      CdcStream.readTopKView(spark, root)
+      CdcStream.readMultiView(spark, root, "tk")
         .select(col("grp"), col("rk"), col("id")).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     // batch 1: 3 rows in group a -> id=3 (v=1) is OUTSIDE the k=2 view
@@ -1324,9 +1331,9 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainTopKToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", orderCol = "v", k = 2, root, ckpt)
+      Seq(CdcStream.NamedTableView.topK("tk", "grp", "v", 2)), root, ckpt)
       .awaitTermination()
     append("b1.json", Seq(
       ev("insert", 1, 1, "a", 9.0), ev("insert", 2, 2, "a", 5.0),
@@ -1336,7 +1343,7 @@ class StreamingSpec extends SparkSpec {
     // holders (id=3 promoted from OUTSIDE the persisted view)
     append("b2.json", Seq(ev("delete", 5, 1, "a", 9.0)))
     run()
-    val ch = CdcStream.readViewChanges(spark, root)
+    val ch = CdcStream.readViewChanges(spark, s"$root/tk")
       .select(col("batch"), col("op"), col("grp"), col("rk"),
               col("before.id").as("b_id"), col("after.id").as("a_id"))
       .collect()
@@ -1367,9 +1374,9 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainTopKToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", orderCol = "v", k = 2, root, ckpt)
+      Seq(CdcStream.NamedTableView.topK("tk", "grp", "v", 2)), root, ckpt)
       .awaitTermination()
     // three batches with churn: insert, promote-on-delete, group growth
     append("b1.json", Seq(
@@ -1388,10 +1395,10 @@ class StreamingSpec extends SparkSpec {
     // standard materializer reconstructs the view exactly — the emitted
     // changelog is a complete change stream, not a log of hints
     val events = CdcStream.changelogAsEvents(
-      CdcStream.readViewChanges(spark, root))
+      CdcStream.readViewChanges(spark, s"$root/tk"))
     val rebuilt = Materializer.currentState(events, Seq("grp", "rk"))
       .select(col("grp"), col("rk"), col("id"), col("v"))
-    val view = CdcStream.readTopKView(spark, root)
+    val view = CdcStream.readMultiView(spark, root, "tk")
       .select(col("grp"), col("rk"), col("id"), col("v"))
     assert(rebuilt.exceptAll(view).isEmpty && view.exceptAll(rebuilt).isEmpty,
       "replaying the view's own changelog must reconstruct the view")
@@ -1429,7 +1436,7 @@ class StreamingSpec extends SparkSpec {
       "the on-disk Maxwell relay must reconstruct the view")
     // monitoring face: the health snapshot sees the last applied batch,
     // the persisted view size, and the full changelog retention window
-    val stats = CdcStream.viewStats(spark, root)
+    val stats = CdcStream.viewStats(spark, root, "tk__view")
     assert(stats == CdcStream.ViewStats(2L, view.count(), Some((0L, 2L))),
       s"unexpected view stats: $stats")
   }
@@ -1452,13 +1459,14 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainJoinTopKToParquet(
+    def run(): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
-      lJoinCols = Seq("fk"), viewCols = Seq("k", "fk", "grp", "price"),
-      groupCol = "grp", orderCol = "price", k = 2, root, ckpt)
-      .awaitTermination()
+      lJoinCols = Seq("fk"),
+      Seq(CdcStream.NamedView.joinTopK("jtk",
+        Seq("k", "fk", "grp", "price"), "grp", "price", 2)),
+      root, ckpt).awaitTermination()
     def view(): Set[(String, Int, Long, Double)] =
-      CdcStream.readJoinTopKView(spark, root)
+      CdcStream.readMultiView(spark, root, "jtk")
         .select(col("grp"), col("rk"), col("k"), col("price")).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
                    r.getDouble(3))).toSet
@@ -1483,7 +1491,7 @@ class StreamingSpec extends SparkSpec {
       "group-moving dim update must carry the whole rank view to b")
     // rank-slot changelog: batch 1 fills both slots, batch 2 promotes on
     // both, batch 3 deletes a's slots and inserts b's
-    val ch = CdcStream.readViewChanges(spark, root)
+    val ch = CdcStream.readViewChanges(spark, s"$root/jtk")
       .select(col("batch"), col("op"), col("grp"), col("rk"),
               col("after.k").as("a_k"))
       .collect()
@@ -1519,11 +1527,12 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      root, ckpt).awaitTermination()
     def view(): Map[String, Long] =
-      CdcStream.readDistinctCountView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "dc").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     // batch 1: a has values {1 (x2 rows), 2}, b has {5}
     append("b1.json", Seq(
@@ -1570,11 +1579,12 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainMinMaxToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.minMax("mm", "grp", "v")),
+      root, ckpt).awaitTermination()
     def view(): Map[String, (Double, Double)] =
-      CdcStream.readDistinctCountView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "mm").collect()
         .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     append("b1.json", Seq(
       ev("insert", 1, 1, "a", 10.0), ev("insert", 2, 2, "a", 7.0),
@@ -1602,12 +1612,13 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainPercentilesToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", ps = Seq(0.5, 0.75),
+      Seq(CdcStream.NamedTableView.percentiles("pct", "grp", "v",
+                                               ps = Seq(0.5, 0.75))),
       root, ckpt).awaitTermination()
     def view(): Map[String, (Double, Double)] =
-      CdcStream.readDistinctCountView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "pct").collect()
         .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     append("b1.json", Seq(
       ev("insert", 1, 1, "a", 10.0), ev("insert", 2, 2, "a", 20.0),
@@ -1639,12 +1650,13 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainMomentsToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt,
-      valueCast = _.cast("decimal(18,8)")).awaitTermination()
+      Seq(CdcStream.NamedTableView.moments("mom", "grp", "v",
+                                           _.cast("decimal(18,8)"))),
+      root, ckpt).awaitTermination()
     def sums(): Map[String, (Double, Long)] =
-      CdcStream.readDistinctCountView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "mom").collect()
         .map(r => r.getString(0) ->
           ((r.getDecimal(1).doubleValue, r.getLong(3)))).toMap
     append("b1.json", Seq(
@@ -1684,9 +1696,10 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainDistinctCountToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt).awaitTermination()
+      Seq(CdcStream.NamedTableView.distinctCount("dc", "grp", "v")),
+      root, ckpt).awaitTermination()
     // batch 0: a has {1 (x2 rows), 2}, b has {5}
     append("b1.json", Seq(
       ev("insert", 1, 1, "a", 1), ev("insert", 2, 2, "a", 1),
@@ -1700,7 +1713,7 @@ class StreamingSpec extends SparkSpec {
     append("b3.json", Seq(upd(7, 2, "b", 5, "\"grp\":\"a\",\"v\":1"),
                           ev("delete", 8, 1, "a", 1)))
     run()
-    val ch = CdcStream.readViewChanges(spark, root)
+    val ch = CdcStream.readViewChanges(spark, s"$root/dc")
       .select(col("batch"), col("op"), col("grp"),
               col("before.n_distinct_v").as("b_n"),
               col("after.n_distinct_v").as("a_n"))
@@ -1720,21 +1733,21 @@ class StreamingSpec extends SparkSpec {
     // the view as of every batch — including the final one, which must
     // equal the live view itself
     def at(b: Long): Map[String, Long] =
-      CdcStream.viewAsOfBatch(spark, root, b).collect()
+      CdcStream.viewAsOfBatch(spark, s"$root/dc", b).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(at(0) == Map("a" -> 2L, "b" -> 1L))
     assert(at(1) == Map("a" -> 1L, "b" -> 1L))
     assert(at(2) == Map("b" -> 1L))
-    val live = CdcStream.readDistinctCountView(spark, root).collect()
+    val live = CdcStream.readMultiView(spark, root, "dc").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(at(2) == live, "changes-fold must equal the live view")
     // retention: trim below batch 1 — later history (and the live view)
     // unaffected; the pruned range is gone
-    assert(CdcStream.pruneViewChanges(spark, root, 1L) == 1)
-    assert(CdcStream.readViewChanges(spark, root)
+    assert(CdcStream.pruneViewChanges(spark, s"$root/dc", 1L) == 1)
+    assert(CdcStream.readViewChanges(spark, s"$root/dc")
       .select(min(col("batch"))).collect()(0).getAs[Number](0)
       .longValue == 1L)
-    assert(CdcStream.pruneViewChanges(spark, root, 1L) == 0,
+    assert(CdcStream.pruneViewChanges(spark, s"$root/dc", 1L) == 0,
       "prune must be idempotent")
   }
 
@@ -1754,12 +1767,13 @@ class StreamingSpec extends SparkSpec {
     def append(name: String, lines: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(logDir, name),
         (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(): Unit = CdcStream.maintainMomentsToParquet(
+    def run(): Unit = CdcStream.maintainTableViewsToParquet(
       CdcStream.fileChangelog(spark, logDir), spec,
-      groupCol = "grp", valueCol = "v", root, ckpt,
-      valueCast = _.cast("decimal(18,8)")).awaitTermination()
+      Seq(CdcStream.NamedTableView.moments("mom", "grp", "v",
+                                           _.cast("decimal(18,8)"))),
+      root, ckpt).awaitTermination()
     def view(): Map[String, (Double, Double, Long)] =
-      CdcStream.readDistinctCountView(spark, root).collect()
+      CdcStream.readMultiView(spark, root, "mom").collect()
         .map(r => r.getString(0) -> ((r.getDecimal(1).doubleValue(),
           r.getDecimal(2).doubleValue(), r.getLong(3)))).toMap
     // batch 1: a = {10, 6}, b = {5}
@@ -2419,10 +2433,11 @@ class StreamingSpec extends SparkSpec {
         """{"database":"d","table":"fact","type":"insert","ts":1,"data":{"k":1,"fk":10,"price":5.0}}""",
         """{"database":"d","table":"dim","type":"insert","ts":2,"data":{"ck":10,"name":"c10"}}""")
         .mkString("\n") + "\n").getBytes("UTF-8"))
-    def run(ls: TableSpec): Unit = CdcStream.maintainJoinViewToParquet(
+    def run(ls: TableSpec): Unit = CdcStream.maintainMultiViewToParquet(
       CdcStream.fileChangelog(spark, logDir), ls, rSpec,
       lJoinCols = Seq("fk"),
-      viewCols = Seq("k", "fk", "price", "ck", "name"),
+      Seq(CdcStream.NamedView.joinView("jv",
+        Seq("k", "fk", "price", "ck", "name"), Seq("k"))),
       root, ckpt).awaitTermination()
     run(lSpec(extra = false))
     Files.write(java.nio.file.Paths.get(logDir, "b2.json"),
@@ -2434,7 +2449,7 @@ class StreamingSpec extends SparkSpec {
       while (c.getCause != null) c = c.getCause
       c.getMessage
     }
-    assert(rootMsg(ex).contains("maintainJoinViewToParquet") &&
+    assert(rootMsg(ex).contains("maintainMultiViewToParquet") &&
              rootMsg(ex).contains("added qty") &&
              rootMsg(ex).contains("Rebuild"),
       s"join path must refuse an ALTER loudly naming the recipe: " +
@@ -2860,5 +2875,138 @@ class StreamingSpec extends SparkSpec {
     assert(!fs.exists(side) && !fs.exists(lock) &&
              !fs.exists(marker("v_d__retrain_pending_42")))
     fs.delete(dst, true) // leave the maintained root as the stream left it
+  }
+
+  // ---- registration and layout refusals (cheap: one tiny batch at most)
+
+  private def rootCause(e: Throwable): String = {
+    var c: Throwable = e
+    while (c.getCause != null) c = c.getCause
+    c.getMessage
+  }
+
+  /** A two-topic fact(k, fk, grp, price) / dim(ck, name) changelog with
+    * one batch, plus the specs. */
+  private def tinyJoinLog(tag: String) = {
+    import org.apache.spark.sql.types._
+    import graft.cdc.TableSpec
+    val logDir = tmpDir(s"${tag}log")
+    Files.write(java.nio.file.Paths.get(logDir, "b1.json"), (Seq(
+      """{"database":"d","table":"fact","type":"insert","ts":1,"data":{"k":1,"fk":10,"grp":"a","price":5.0}}""",
+      """{"database":"d","table":"dim","type":"insert","ts":2,"data":{"ck":10,"name":"c10"}}""")
+      .mkString("\n") + "\n").getBytes("UTF-8"))
+    val lSpec = TableSpec("d", "fact", Seq("k"), StructType(Seq(
+      StructField("k", LongType), StructField("fk", LongType),
+      StructField("grp", StringType), StructField("price", DoubleType))))
+    val rSpec = TableSpec("d", "dim", Seq("ck"), StructType(Seq(
+      StructField("ck", LongType), StructField("name", StringType))))
+    (logDir, lSpec, rSpec)
+  }
+
+  /** Run the multi-view runner over [[tinyJoinLog]] with `view` and
+    * return the refusal's root message; nothing may be committed. */
+  private def refusedJoinView(tag: String,
+                              view: CdcStream.NamedView[_]): String = {
+    val (logDir, lSpec, rSpec) = tinyJoinLog(tag)
+    val root = tmpDir(s"${tag}state")
+    val ex = intercept[Exception] {
+      CdcStream.maintainMultiViewToParquet(
+        CdcStream.fileChangelog(spark, logDir), lSpec, rSpec,
+        lJoinCols = Seq("fk"), Seq(view), root, tmpDir(s"${tag}ckpt"))
+        .awaitTermination()
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(root, "current")),
+      "a refused registration must commit no generation")
+    rootCause(ex)
+  }
+
+  test("multi-view runner refuses a mismatched join shape before the stream starts") {
+    import org.apache.spark.sql.types._
+    import graft.cdc.TableSpec
+    val (logDir, lSpec, rSpec) = tinyJoinLog("shape")
+    val views = Seq(CdcStream.NamedView.joinView("jv",
+      Seq("k", "fk", "price", "ck", "name"), Seq("k")))
+    def start(ls: TableSpec, rs: TableSpec, fk: Seq[String]) =
+      CdcStream.maintainMultiViewToParquet(
+        CdcStream.fileChangelog(spark, logDir), ls, rs, fk, views,
+        tmpDir("shapestate"), tmpDir("shapeckpt"))
+    // arity: two join columns against a one-column primary key
+    val arity = intercept[IllegalArgumentException] {
+      start(lSpec, rSpec, Seq("fk", "price"))
+    }
+    assert(arity.getMessage.contains("positionally"), arity.getMessage)
+    // overlap: the dimension's key is named like the fact's join column
+    val rFk = TableSpec("d", "dim", Seq("fk"), StructType(Seq(
+      StructField("fk", LongType), StructField("name", StringType))))
+    val overlap = intercept[IllegalArgumentException] {
+      start(lSpec, rFk, Seq("fk"))
+    }
+    assert(overlap.getMessage.contains("must not share column names"),
+      overlap.getMessage)
+  }
+
+  test("joinView registration without the fact's primary key is refused, naming it") {
+    val msg = refusedJoinView("jvpk", CdcStream.NamedView.joinView("jv",
+      Seq("fk", "price", "ck", "name"), Seq("k")))
+    assert(msg.contains("viewCols") && msg.contains("missing k"), msg)
+  }
+
+  test("leftJoinView registration without the join column is refused, naming it") {
+    val msg = refusedJoinView("ljfk", CdcStream.NamedView.leftJoinView("lj",
+      Seq("k", "price", "name"), Seq("k")))
+    assert(msg.contains("viewCols") && msg.contains("missing fk"), msg)
+  }
+
+  test("joinTopK registration without the join column is refused at bootstrap, naming it") {
+    val msg = refusedJoinView("jtkfk", CdcStream.NamedView.joinTopK("jtk",
+      Seq("k", "grp", "price"), "grp", "price", 2))
+    assert(msg.contains("viewCols") && msg.contains("missing fk"), msg)
+  }
+
+  /** A generation laid out as a removed single-view face left it. */
+  private def plantFaceGeneration(root: String, entries: Seq[String]): Unit =
+    entries.foreach(e => spark.range(1).write.parquet(s"$root/current/$e"))
+
+  test("table runner refuses a root written by a removed single-view face") {
+    import org.apache.spark.sql.types._
+    import graft.cdc.TableSpec
+    val logDir = tmpDir("oldtlog")
+    val root = tmpDir("oldtstate")
+    Files.write(java.nio.file.Paths.get(logDir, "b1.json"),
+      ("""{"database":"d","table":"t","type":"insert","ts":1,"data":{"id":1,"grp":"a","v":1.0}}""" +
+        "\n").getBytes("UTF-8"))
+    val spec = TableSpec("d", "t", Seq("id"), StructType(Seq(
+      StructField("id", LongType), StructField("grp", StringType),
+      StructField("v", DoubleType))))
+    // the moments face persisted its per-group frame as `state` — the
+    // name the table runner reads as the TABLE state
+    plantFaceGeneration(root, Seq("state", "view"))
+    val ex = intercept[Exception] {
+      CdcStream.maintainTableViewsToParquet(
+        CdcStream.fileChangelog(spark, logDir), spec,
+        Seq(CdcStream.NamedTableView.moments("mom", "grp", "v")),
+        root, tmpDir("oldtckpt")).awaitTermination()
+    }
+    val msg = rootCause(ex)
+    assert(msg.contains("maintainTableViewsToParquet") &&
+             msg.contains("[view]") && msg.contains("Rebuild") &&
+             msg.contains("checkpoint"), msg)
+  }
+
+  test("multi-view runner refuses a root written by a removed single-view face") {
+    val (logDir, lSpec, rSpec) = tinyJoinLog("oldm")
+    val root = tmpDir("oldmstate")
+    plantFaceGeneration(root, Seq("left", "right", "agg"))
+    val ex = intercept[Exception] {
+      CdcStream.maintainMultiViewToParquet(
+        CdcStream.fileChangelog(spark, logDir), lSpec, rSpec, Seq("fk"),
+        Seq(CdcStream.NamedView.joinAgg("ja", Seq("name"),
+          Seq(("price", "price", identity)))),
+        root, tmpDir("oldmckpt")).awaitTermination()
+    }
+    val msg = rootCause(ex)
+    assert(msg.contains("maintainMultiViewToParquet") &&
+             msg.contains("[agg]") && msg.contains("Rebuild") &&
+             msg.contains("checkpoint"), msg)
   }
 }
