@@ -73,7 +73,7 @@ object JoinAggView {
   }
 
   /** The aggregate-specific half of a batch, folded off the shared
-    * [[MultiView.batchCtx]] via [[maintainerNamed]]: retract touched join
+    * [[SnowflakeView.chainStep]] via [[maintainerNamed]]: retract touched join
     * rows from the PRE-merge live states, insert from the POST-merge
     * ones, fold the per-group deltas into the O(|groups|) aggregate
     * state. `measures` are `(outName, srcCol, cast)` — several measures

@@ -51,7 +51,7 @@ object JoinDistinctView {
 
   /** The pair-state-specific half of a batch — JoinAggView's delta-join
     * restriction, folded into the additive pair state off the shared
-    * [[MultiView.batchCtx]] (via [[maintainer]]). */
+    * [[SnowflakeView.chainStep]] (via [[maintainer]]). */
   private[cdc] def stepPairs(pairs: DataFrame, groups: DataFrame,
                              ctx: MultiView.BatchCtx,
                              groupCol: String, valueCol: String)

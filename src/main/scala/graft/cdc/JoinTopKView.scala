@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object JoinTopKView {
 
   /** The rank-specific half of a batch, folded off the shared
-    * [[MultiView.batchCtx]] (via [[maintainer]]): advance the join view
+    * [[SnowflakeView.chainStep]] (via [[maintainer]]): advance the join view
     * one step, then re-rank ONLY the touched groups. `viewCols` is the
     * join-view projection (must include `lPk`, `lJoinCols`, `groupCol`,
     * `orderCol`); ranks are `orderCol DESC, lPk ASC` within `groupCol`,

@@ -78,7 +78,7 @@ object JoinView {
 
   /** The view-specific half of a batch: retract touched view rows, rebuild
     * them from the post-merge live states (the L/R merges and the
-    * changed-key sets are the shared [[MultiView.batchCtx]]). `viewCols`
+    * changed-key sets are the shared [[SnowflakeView.chainStep]]). `viewCols`
     * is the view projection (column names from live(L) ++ live(R); must
     * include `lPk` and `lJoinCols`). An over-cap side of the ctx (the
     * batch blew `maxLocalKeys`) runs the DISTRIBUTED fallback:

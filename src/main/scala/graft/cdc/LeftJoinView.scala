@@ -50,7 +50,7 @@ object LeftJoinView {
   }
 
   /** The view-specific half of a batch, folded off the shared
-    * [[MultiView.batchCtx]] ([[JoinView.stepView]]'s contract: `viewCols`
+    * [[SnowflakeView.chainStep]] ([[JoinView.stepView]]'s contract: `viewCols`
     * must include `lPk` and `lJoinCols`; an over-cap ctx side runs the
     * distributed fallback). */
   private[cdc] def stepView(view: DataFrame, ctx: MultiView.BatchCtx,

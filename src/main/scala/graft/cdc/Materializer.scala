@@ -334,7 +334,7 @@ object Materializer {
       }
     }
     // callers that already hold the batch's changed-key set (e.g.
-    // MultiView.batchCtx collects it once as a LocalRelation, making the
+    // SnowflakeView.chainStep collects it once as a LocalRelation, making the
     // two key joins below driver-local broadcasts — no build job) pass it
     // in; otherwise derive it from the batch
     val ck = changedKeys.getOrElse(evts

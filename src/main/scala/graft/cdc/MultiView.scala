@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
 object MultiView {
 
   /** Everything a view's per-batch step needs that does NOT depend on
-    * which view it is — computed once per batch by [[batchCtx]].
+    * which view it is — computed once per batch by
+    * [[SnowflakeView.chainStep]] (at n = 2: `L` = table 0, `R` = table 1).
     * `preLiveL`/`preLiveR` are the live rows of the PRE-merge states
     * (for retract branches), `liveL`/`liveR` of the POST-merge states
     * (for insert/rebuild branches); all four are lazy projections over
-    * states pinned by the replay loop, so evaluation order cannot leak
+    * states pinned by the fold kernel, so evaluation order cannot leak
     * the merged state into a retract. */
   final case class BatchCtx(
       lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
@@ -199,67 +200,52 @@ object MultiView {
     }) ++ extras
   }
 
-  /** Resolve a replay's batch shuffle width: explicit > 0 wins; the 0
-    * sentinel inherits the parent session's shuffle width (clamped to
-    * [2, 64]). The default stays NARROW (8): measured at sf0.1, running
-    * the macro-batch replay session-wide (32) cost ~2.5x the task time
-    * of 8-wide — per-task constants (codegen setup, broadcast fetch,
-    * checkpoint block overhead) dominate the |Δ|-bounded batch joins,
-    * so narrow batches win even when cores sit idle. The sentinel is
-    * for callers whose batches are genuinely state-sized. */
-  private[cdc] def resolveBatchWidth(parent: SparkSession,
-                                     requested: Int): Int = {
-    // 0 is THE sentinel; negative widths are caller bugs, not requests
-    require(requested >= 0,
-      s"resolveBatchWidth: requested width must be >= 0 (0 = inherit " +
-        s"session width), got $requested")
-    if (requested > 0) requested
-    else scala.util.Try(
-      parent.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(8).max(2).min(64)
-  }
-
   /** Empty LocalRelation with `df`'s schema in `df`'s session — flattens
     * derived-empty lineage so batch-1 analysis never drags the heavy
     * schema-seed plans along. */
   private[graft] def emptyLike(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.emptyRDD[Row], df.schema)
+    emptyIn(df.sparkSession, df)
 
-  /** The per-batch SHARED work: changed-key sets (pre-collected via
-    * `keys`, else derived under `maxLocalKeys` — a `None` side runs the
-    * distributed fallback) and the two state merges, each pinned lazily.
-    * Returns the ctx plus the merged (pinned) states; every registered
-    * maintainer's step folds this same ctx. */
-  private[graft] def batchCtx(stL: DataFrame, stR: DataFrame,
-      dl: DataFrame, dr: DataFrame,
-      lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
-      keys: Option[(Option[DataFrame], Option[DataFrame])],
-      maxLocalKeys: Int): (BatchCtx, DataFrame, DataFrame) = {
-    def distributedKeys(delta: DataFrame, ks: Seq[String]): DataFrame =
-      delta.select(ks.map(k => col(s"after.$k").as(k)): _*)
-        .distinct().localCheckpoint(false)
-    val (changedL, lLocal) =
-      keys.map(_._1).getOrElse(JoinView.localKeys(dl, lPk, maxLocalKeys)) match {
-        case Some(lk) => (lk, true)
-        case None     => (distributedKeys(dl, lPk), false)
-      }
-    val (changedR, rLocal) =
-      keys.map(_._2).getOrElse(JoinView.localKeys(dr, rPk, maxLocalKeys)) match {
-        case Some(rk) => (rk, true)
-        case None     => (distributedKeys(dr, rPk), false)
-      }
-    val lNext = Materializer.merge(stL, dl, lPk,
-      changedKeys = Some(changedL)).localCheckpoint(false)
-    val rNext = Materializer.merge(stR, dr, rPk,
-      changedKeys = Some(changedR)).localCheckpoint(false)
-    (BatchCtx(lPk, rPk, lJoinCols,
-              changedL, lLocal, changedR, rLocal,
-              Materializer.liveView(stL), Materializer.liveView(stR),
-              Materializer.liveView(lNext), Materializer.liveView(rNext),
-              maxLocalKeys),
-     lNext, rNext)
+  /** [[emptyLike]] in `session`. */
+  private[cdc] def emptyIn(session: SparkSession, df: DataFrame): DataFrame =
+    session.createDataFrame(session.sparkContext.emptyRDD[Row], df.schema)
+
+  /** A replay's batch session: a CHILD of `parent` (`newSession()`:
+    * shared SparkContext and catalog, independent SQL conf — the
+    * caller's conf is never mutated) with AQE off (micro-batch plans are
+    * small, known-shape plans over pinned inputs, where AQE's
+    * stage-by-stage materialization only adds latency) and shuffles at
+    * the batch width: `requested` > 0 wins; the 0 sentinel inherits the
+    * parent session's shuffle width (clamped to [2, 64]). The replays'
+    * default stays NARROW (8): measured at sf0.1, running the
+    * macro-batch replay session-wide (32) cost ~2.5x the task time of
+    * 8-wide — per-task constants (codegen setup, broadcast fetch,
+    * checkpoint block overhead) dominate the |Δ|-bounded batch joins, so
+    * narrow batches win even when cores sit idle. The sentinel is for
+    * callers whose batches are genuinely state-sized. */
+  private[cdc] def batchSession(parent: SparkSession,
+                                requested: Int): SparkSession = {
+    // 0 is THE sentinel; negative widths are caller bugs, not requests
+    require(requested >= 0,
+      s"batchShufflePartitions must be >= 0 (0 = inherit session " +
+        s"width), got $requested")
+    val width = if (requested > 0) requested else scala.util.Try(
+      parent.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(8).max(2).min(64)
+    val child = parent.newSession()
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.shuffle.partitions", width.toString)
+    child
   }
+
+  /** A replay's log pinned ONCE in its batch session and coalesced to
+    * the batch width, so each window is a cheap filter over the pinned
+    * RDD. */
+  private[cdc] def pinnedIn(child: SparkSession, events: DataFrame)
+      : DataFrame =
+    org.apache.spark.sql.graft.bridge.reRoot(
+      Materializer.pinnedEvents(events), child)
+      .coalesce(child.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** The join shape every two-topic maintainer assumes: `lJoinCols(i)`
     * references `rPk(i)`, and the two name sets are disjoint (shared
@@ -323,102 +309,26 @@ object MultiView {
     autoCuts(events, events.limit(0), maxEventsPerBatch)
 
   /** Replay two event streams across `cuts` ONCE, maintaining every
-    * registered view (one maintainer or many). Micro-batch discipline:
-    * AQE is off on a CHILD session (`newSession()`: shared SparkContext
-    * and catalog, independent SQL conf — the caller's conf is never
-    * mutated; micro-batch plans are small, known-shape plans over pinned
-    * inputs, where AQE's stage-by-stage materialization only adds
-    * latency), shuffles run at the batch width, the decoded logs are
-    * pinned once so each window is a cheap filter over the pinned RDD,
-    * and the next window's key collects are prefetched. Results are
-    * handed back re-rooted in the caller's session. `maxEventsPerBatch`
-    * augments the caller's cuts with [[autoCuts]], so a backlog keeps
-    * the broadcast delta path. */
+    * registered view (one maintainer or many): the two-table chain
+    * ([[SnowflakeView]] at n = 2, `left` = table 0, `right` = table 1),
+    * with the same micro-batch discipline — child session, AQE off,
+    * batch-width shuffles, logs pinned once, next window's key collects
+    * prefetched, maintainers stepped concurrently. Results are handed
+    * back re-rooted in the caller's session. `maxEventsPerBatch` augments
+    * the caller's cuts with [[autoCuts]], so a backlog keeps the
+    * broadcast delta path. Unlike [[SnowflakeView.replay]] the two sides
+    * may share live column names (the join-shape check covers only the
+    * key columns). */
   def replay(lEvents: DataFrame, rEvents: DataFrame, cuts: Seq[Long],
              lPk: Seq[String], rPk: Seq[String], lJoinCols: Seq[String],
              maintainers: Seq[Maintainer[_]],
              batchShufflePartitions: Int = 8,
              maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys,
              maxEventsPerBatch: Option[Int] = None): Result = {
-    require(maintainers.nonEmpty, "at least one maintainer")
-    // results are keyed by maintainer IDENTITY — a repeated instance
-    // would collapse to one entry and silently drop a registration
-    require(maintainers.distinct.size == maintainers.size,
-      "each maintainer must be a distinct instance (results are keyed " +
-        "by identity); build a second instance for a second view")
     requireJoinShape(rPk, lJoinCols)
-    val parent = lEvents.sparkSession
-    val batchWidth = resolveBatchWidth(parent, batchShufflePartitions)
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions", batchWidth.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyInChild(df: DataFrame): DataFrame =
-      child.createDataFrame(child.sparkContext.emptyRDD[Row], df.schema)
-    val lSchema = emptyInChild(Materializer.compact(lEvents.limit(0), lPk))
-    val rSchema = emptyInChild(Materializer.compact(rEvents.limit(0), rPk))
-    val liveL0 = lSchema.drop(Materializer.MetaCols: _*)
-    val liveR0 = rSchema.drop(Materializer.MetaCols: _*)
-    // erased view of the maintainers so one loop can fold them all; the
-    // types round-trip through Result's identity-keyed lookup
-    val ms = maintainers.map(_.asInstanceOf[Maintainer[Any]])
-    var states: Seq[Any] =
-      ms.map(_.empty(liveL0, liveR0, lPk, rPk, lJoinCols))
-    val lPinned = inChild(Materializer.pinnedEvents(lEvents))
-      .coalesce(batchWidth)
-    val rPinned = inChild(Materializer.pinnedEvents(rEvents))
-      .coalesce(batchWidth)
-    // auto-cuts run over the PINNED logs (the count + quantile pass then
-    // reads the persisted RDD, not a fresh decode lineage)
-    val allCuts = maxEventsPerBatch match {
-      case Some(m) => (cuts ++ autoCuts(lPinned, rPinned, m))
-        .distinct.sorted
-      case None => cuts
-    }
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: allCuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    // prefetch the NEXT window's changed-key collects off the per-batch
-    // critical path: a window's key sets depend only on the PINNED logs,
-    // never on earlier batches. Look-ahead is one window (an eager wave
-    // would hold every window's key set in driver memory at once), on a
-    // dedicated bounded pool with a finite loud-failure join (Prefetch)
-    val prefetch = new Prefetch
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      (prefetch.submit(
-         JoinView.localKeys(slice(lPinned, lo, hi), lPk, maxLocalKeys)),
-       prefetch.submit(
-         JoinView.localKeys(slice(rPinned, lo, hi), rPk, maxLocalKeys)))
-    }
-    var pending = keysFor(0)
-    var stL = lSchema
-    var stR = rSchema
-    // maintainer folds run concurrently per batch (TableViews
-    // .stepConcurrently — independent states, overlapped step latency)
-    try TableViews.stepConcurrently(ms.size, Some(child)) { parSteps =>
-      bounds.indices.foreach { i =>
-        val (lo, hi) = bounds(i)
-        val (ckLF, ckRF) = pending
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val (ctx, lNext, rNext) = batchCtx(stL, stR,
-          slice(lPinned, lo, hi), slice(rPinned, lo, hi),
-          lPk, rPk, lJoinCols,
-          keys = Some((prefetch.await(ckLF), prefetch.await(ckRF))),
-          maxLocalKeys = maxLocalKeys)
-        states = parSteps(ms.zip(states).map { case (m, s) =>
-          () => m.pin(m.step(s, ctx)): Any
-        })
-        stL = lNext
-        stR = rNext
-      }
-    } finally prefetch.shutdown()
-    import org.apache.spark.sql.graft.bridge.reRoot
-    new Result(reRoot(stL, parent), reRoot(stR, parent),
-      maintainers.zip(states).map { case (m, s) =>
-        (m: Maintainer[_]) -> m.asInstanceOf[Maintainer[Any]].reRoot(s, parent)
-      }.toMap)
+    val (tables, states) = SnowflakeView.replayChain(Seq(lEvents, rEvents),
+      Seq(lPk, rPk), Seq(lJoinCols), cuts, maintainers,
+      batchShufflePartitions, maxLocalKeys, maxEventsPerBatch)
+    new Result(tables(0), tables(1), states)
   }
 }

@@ -1,15 +1,15 @@
 package graft.cdc
 
-/** Dedicated look-ahead executor for the replay loops' next-window
+/** Dedicated look-ahead executor for the chain fold kernel's next-window
   * driver-collect prefetch (changed keys / touched groups). These
   * futures used to run on `ExecutionContext.Implicits.global` and were
   * joined with `Await.result(_, Duration.Inf)` — on a starved global
   * pool (library users share it) a replay could hang indefinitely, and
-  * an unbounded wait hides a wedged collect job forever. Each replay
-  * now owns a small daemon pool (two threads: the L and R collects of
-  * the single look-ahead window — look-ahead is bounded to one window
-  * by design, see MultiView.replay) and joins with a generous but FINITE
-  * timeout that fails loudly instead of wedging.
+  * an unbounded wait hides a wedged collect job forever. Each fold
+  * now owns a small daemon pool (a thread per table, at most four: the
+  * collects of the single look-ahead window — look-ahead is bounded to
+  * one window by design, see SnowflakeView.fold) and joins with a
+  * generous but FINITE timeout that fails loudly instead of wedging.
   */
 private[cdc] final class Prefetch(threads: Int = 2) {
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,

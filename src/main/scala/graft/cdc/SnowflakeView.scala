@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N-topic (snowflake-chain) SHARED replay: ONE replay of N changelogs
@@ -63,7 +63,7 @@ object SnowflakeView {
     * (broadcast-sound: the state is pk-unique, so the semi join yields
     * ≤ 1 row per key); over it — or when either input already fell back
     * — the union runs distributed and downstream joins lose their hints,
-    * mirroring [[MultiView.batchCtx]]'s discipline. */
+    * mirroring [[chainStep]]'s per-table discipline. */
   private def extendKeys(base: (DataFrame, Boolean), merged: DataFrame,
       fk: Seq[String], pk: Seq[String], downPk: Seq[String],
       down: (DataFrame, Boolean), cap: Int): (DataFrame, Boolean) = {
@@ -95,12 +95,10 @@ object SnowflakeView {
     }
   }
 
-  /** The per-batch SHARED chain work, used by both [[replay]] and the
-    * streaming face
-    * ([[graft.streaming.CdcStream.maintainSnowflakeViewToParquet]]):
-    * resolve per-table changed keys (pre-collected via `keys`, else
-    * derived under the cap with the distributed fallback), merge all N
-    * table states, cascade effective keys bottom-up, step the
+  /** The per-batch SHARED chain work, one window of [[fold]]: resolve
+    * per-table changed keys (pre-collected via `keys`, else derived
+    * under the cap with the distributed fallback), merge all N table
+    * states, cascade effective keys bottom-up, step the
     * intermediate chain views, and assemble the maintainers' two-sided
     * top-level ctx. `vPre` holds the previous batch's intermediate views
     * `V_k = T_k ⋈ … ⋈ Tₙ` for k = 1..n−2 (empty for n = 2). Returns the
@@ -111,9 +109,6 @@ object SnowflakeView {
       keys: Option[Seq[Option[DataFrame]]], maxLocalKeys: Int)
       : (Seq[DataFrame], Seq[DataFrame], MultiView.BatchCtx) = {
     val n = states.size
-    require(vPre.size == math.max(n - 2, 0),
-      s"vPre must carry the ${math.max(n - 2, 0)} intermediate views, " +
-        s"got ${vPre.size}")
     def distributedKeys(delta: DataFrame, ks: Seq[String]): DataFrame =
       delta.select(ks.map(k => col(s"after.$k").as(k)): _*)
         .distinct().localCheckpoint(false)
@@ -182,100 +177,125 @@ object SnowflakeView {
     * Maintainers see `L = T₁, R = T₂ ⋈ … ⋈ Tₙ`; their `viewCols` /
     * group columns may draw from ANY table's live columns (which must be
     * pairwise distinct across tables — TPC-H-style prefixes). Same
-    * micro-batch discipline as [[MultiView.replay]]: child session, AQE
-    * off, batch-width shuffles, logs pinned once, next window's key
-    * collects prefetched on a bounded pool, `maxEventsPerBatch`
-    * auto-cuts over the combined logs. */
+    * micro-batch discipline as [[MultiView.replay]] ([[replayChain]]). */
   def replay(events: Seq[DataFrame], pks: Seq[Seq[String]],
              fks: Seq[Seq[String]], cuts: Seq[Long],
              maintainers: Seq[MultiView.Maintainer[_]],
              batchShufflePartitions: Int = 8,
              maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys,
              maxEventsPerBatch: Option[Int] = None): Result = {
-    val n = events.size
-    requireChain(n, pks, fks)
-    require(maintainers.nonEmpty, "at least one maintainer")
-    require(maintainers.distinct.size == maintainers.size,
-      "each maintainer must be a distinct instance (results are keyed " +
-        "by identity); build a second instance for a second view")
-    val parent = events.head.sparkSession
-    val batchWidth =
-      MultiView.resolveBatchWidth(parent, batchShufflePartitions)
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions", batchWidth.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyInChild(df: DataFrame): DataFrame =
-      child.createDataFrame(child.sparkContext.emptyRDD[Row], df.schema)
-    // schema seeds (empty LocalRelations — batch-1 analysis never drags
-    // the heavy decode lineage along, MultiView rationale)
-    val schemas = events.zip(pks).map { case (ev, pk) =>
-      emptyInChild(Materializer.compact(ev.limit(0), pk)) }
-    val live0 = schemas.map(_.drop(Materializer.MetaCols: _*))
+    requireChain(events.size, pks, fks)
     // the chain view carries the union of all live columns — ambiguity
     // in the per-level joins and the maintainers' projections is fatal
-    val dup = live0.flatMap(_.columns).groupBy(identity)
-      .collect { case (c, v) if v.size > 1 => c }
+    val dup = events.zip(pks)
+      .flatMap { case (ev, pk) => Materializer.compact(ev.limit(0), pk)
+        .drop(Materializer.MetaCols: _*).columns }
+      .groupBy(identity).collect { case (c, v) if v.size > 1 => c }
     require(dup.isEmpty,
       s"live column names must be distinct across chain tables " +
         s"(duplicated: ${dup.mkString(",")}); rename via TableSpec")
-    def joinCondFor(k: Int) = fks(k).zip(pks(k + 1))
-      .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-    // chain0(k) = empty frame with V_k's schema (live cols of k..n−1)
-    val chain0 = new Array[DataFrame](n)
-    chain0(n - 1) = live0(n - 1)
-    for (k <- n - 2 to 0 by -1)
-      chain0(k) = MultiView.emptyLike(
-        live0(k).join(chain0(k + 1), joinCondFor(k)))
+    val (tables, states) = replayChain(events, pks, fks, cuts, maintainers,
+      batchShufflePartitions, maxLocalKeys, maxEventsPerBatch)
+    new Result(tables, states)
+  }
+
+  /** The chain replays' shared body ([[replay]], and [[MultiView.replay]]
+    * at n = 2), which checks no join shape: a child session with AQE
+    * off and batch-width shuffles ([[MultiView.batchSession]]), the logs
+    * pinned once, `maxEventsPerBatch` auto-cuts over the combined logs,
+    * and one [[fold]] from empty states. Returns the table states and
+    * the maintainer states keyed by maintainer, re-rooted in the
+    * caller's session. */
+  private[cdc] def replayChain(events: Seq[DataFrame],
+      pks: Seq[Seq[String]], fks: Seq[Seq[String]], cuts: Seq[Long],
+      maintainers: Seq[MultiView.Maintainer[_]], batchShufflePartitions: Int,
+      maxLocalKeys: Int, maxEventsPerBatch: Option[Int])
+      : (Seq[DataFrame], Map[MultiView.Maintainer[_], Any]) = {
+    TableViews.requireRegistration(maintainers)
+    val parent = events.head.sparkSession
+    val child = MultiView.batchSession(parent, batchShufflePartitions)
+    // schema seeds (empty LocalRelations — batch-1 analysis never drags
+    // the heavy decode lineage along)
+    val schemas = events.zip(pks).map { case (ev, pk) =>
+      MultiView.emptyIn(child, Materializer.compact(ev.limit(0), pk)) }
+    val live0 = schemas.map(_.drop(Materializer.MetaCols: _*))
+    val chain0 = emptyChain(live0, pks, fks)
     val ms = maintainers.map(_.asInstanceOf[MultiView.Maintainer[Any]])
-    var mStates: Seq[Any] =
-      ms.map(_.empty(live0(0), chain0(1), pks(0), pks(1), fks(0)))
-    val pinned = events.map(ev =>
-      inChild(Materializer.pinnedEvents(ev)).coalesce(batchWidth))
-    val allCuts = maxEventsPerBatch match {
-      case Some(m) =>
-        val allTs = pinned.map(_.select(col("ts"))).reduce(_ unionByName _)
-        (cuts ++ MultiView.autoCuts(allTs, m)).distinct.sorted
-      case None => cuts
-    }
-    def slice(ev: DataFrame, lo: Long, hi: Long) =
-      ev.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: allCuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    val prefetch = new Prefetch(threads = math.min(n, 4))
-    def keysFor(i: Int) = {
-      val (lo, hi) = bounds(i)
-      pinned.zip(pks).map { case (p, pk) =>
-        prefetch.submit(JoinView.localKeys(slice(p, lo, hi), pk, maxLocalKeys))
-      }
+    val pinned = events.map(MultiView.pinnedIn(child, _))
+    // auto-cuts run over the PINNED logs (the count + quantile pass then
+    // reads the persisted RDDs, not a fresh decode lineage)
+    val allCuts = maxEventsPerBatch.fold(cuts)(m => (cuts ++ MultiView
+      .autoCuts(pinned.map(_.select(col("ts"))).reduce(_ unionByName _), m))
+      .distinct.sorted)
+    val (tables, _, states) = fold(schemas, chain0.init,
+      ms, ms.map(_.empty(live0(0), chain0.head, pks(0), pks(1), fks(0))),
+      pinned, allCuts, pks, fks, maxLocalKeys, child)
+    import org.apache.spark.sql.graft.bridge.reRoot
+    (tables.map(reRoot(_, parent)),
+     maintainers.zip(states).map { case (m, s) =>
+       (m: MultiView.Maintainer[_]) ->
+         m.asInstanceOf[MultiView.Maintainer[Any]].reRoot(s, parent)
+     }.toMap)
+  }
+
+  /** Empty frames with the chain views' schemas, `V_k = T_k ⋈ … ⋈ Tₙ`
+    * (the live columns of tables k..n−1) for k = 1..n−1, in that order:
+    * the head is the maintainers' empty `R` side, and the init seeds the
+    * intermediate views of a from-empty [[fold]]. `live0` holds the
+    * tables' empty live (meta-free) frames. */
+  private[graft] def emptyChain(live0: Seq[DataFrame], pks: Seq[Seq[String]],
+                                fks: Seq[Seq[String]]): Seq[DataFrame] =
+    (live0.size - 2 to 1 by -1).scanLeft(live0.last) { (down, k) =>
+      MultiView.emptyLike(live0(k).join(down, fks(k).zip(pks(k + 1))
+        .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)))
+    }.reverse
+
+  /** THE chain fold kernel — the only per-batch window loop over a chain
+    * of tables, shared by the chain replays ([[replayChain]]) and the
+    * chain runner behind
+    * [[graft.streaming.CdcStream.maintainMultiViewToParquet]] and
+    * [[graft.streaming.CdcStream.maintainSnowflakeViewToParquet]]. Folds
+    * the `deltas` window by window (`(lo, hi]` between consecutive
+    * `cuts`, open at both ends): one [[chainStep]] per window, then every
+    * maintainer's step, run concurrently ([[TableViews.stepConcurrently]])
+    * with `session` active on the step threads. The next window's key
+    * collects are prefetched off the critical path: a window's key sets
+    * depend only on the deltas, never on earlier windows. Look-ahead is
+    * one window (an eager wave would hold every window's key set in
+    * driver memory at once), on a dedicated bounded pool with a finite
+    * loud-failure join ([[Prefetch]]). `tables` are the table states,
+    * `chain` the intermediate views `V_1..V_{n−2}`, `states` the
+    * maintainers' states, index-aligned with `ms`. Returns the three,
+    * folded. */
+  private[graft] def fold(tables: Seq[DataFrame], chain: Seq[DataFrame],
+      ms: Seq[MultiView.Maintainer[Any]], states: Seq[Any],
+      deltas: Seq[DataFrame], cuts: Seq[Long], pks: Seq[Seq[String]],
+      fks: Seq[Seq[String]], maxLocalKeys: Int, session: SparkSession)
+      : (Seq[DataFrame], Seq[DataFrame], Seq[Any]) = {
+    val windows = ((Long.MinValue +: cuts) :+ Long.MaxValue).sliding(2)
+      .map { case Seq(lo, hi) =>
+        deltas.map(_.filter(col("ts") > lo && col("ts") <= hi)) }.toSeq
+    val prefetch = new Prefetch(threads = math.min(tables.size, 4))
+    def keysFor(i: Int) = windows(i).zip(pks).map { case (d, pk) =>
+      prefetch.submit(JoinView.localKeys(d, pk, maxLocalKeys))
     }
     var pending = keysFor(0)
-    var states: Seq[DataFrame] = schemas
-    // previous batch's intermediate views V_k, k = 1..n−2
-    var vPre: Seq[DataFrame] = (1 to n - 2).map(chain0)
-    // maintainer folds run concurrently per batch (TableViews
-    // .stepConcurrently — independent states, overlapped step latency)
-    try TableViews.stepConcurrently(ms.size, Some(child)) { parSteps =>
-      bounds.indices.foreach { i =>
-        val (lo, hi) = bounds(i)
+    var st = tables
+    var vPre = chain
+    var vs = states
+    try TableViews.stepConcurrently(ms.size, Some(session)) { parSteps =>
+      windows.indices.foreach { i =>
         val collected = pending.map(prefetch.await)
-        if (i + 1 < bounds.size) pending = keysFor(i + 1)
-        val deltas = pinned.map(slice(_, lo, hi))
-        val (merged, vPost, ctx0) = chainStep(states, vPre, deltas, pks, fks,
+        if (i + 1 < windows.size) pending = keysFor(i + 1)
+        val (merged, vPost, ctx) = chainStep(st, vPre, windows(i), pks, fks,
           keys = Some(collected), maxLocalKeys = maxLocalKeys)
-        mStates = parSteps(ms.zip(mStates).map { case (m, s) =>
-          () => m.pin(m.step(s, ctx0)): Any
+        vs = parSteps(ms.zip(vs).map { case (m, s) =>
+          () => m.pin(m.step(s, ctx)): Any
         })
-        states = merged
+        st = merged
         vPre = vPost
       }
     } finally prefetch.shutdown()
-    import org.apache.spark.sql.graft.bridge.reRoot
-    new Result(states.map(reRoot(_, parent)),
-      maintainers.zip(mStates).map { case (m, s) =>
-        (m: MultiView.Maintainer[_]) ->
-          m.asInstanceOf[MultiView.Maintainer[Any]].reRoot(s, parent)
-      }.toMap)
+    (st, vPre, vs)
   }
 }

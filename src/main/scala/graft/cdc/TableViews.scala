@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SHARED single-topic fan-out: one decoded changelog, N maintained
@@ -21,7 +21,7 @@ object TableViews {
   /** Everything a single-table view's per-batch step needs that does not
     * depend on which view it is. `preState`/`postState` are the
     * tombstone-aware table states before/after this batch's merge (both
-    * pinned by the replay loop); `delta` is the batch's decoded change
+    * pinned by the fold kernel); `delta` is the batch's decoded change
     * events (cheap to re-scan). */
   final case class BatchCtx(
       delta: DataFrame,
@@ -59,7 +59,7 @@ object TableViews {
     * the delta-restricted state merge, pinned. Returns the ctx plus the
     * merged state. Over-cap batches (localKeys returns None — a backlog
     * blew `maxLocalKeys`) derive the key set cluster-side ONCE and pin
-    * it (MultiView.batchCtx discipline) — passing None down to merge
+    * it (SnowflakeView.chainStep discipline) — passing None down to merge
     * would let its anti and semi joins each recompute the distinct,
     * two extra shuffles per backlog batch. `ctx.changedKeys` is
     * therefore always populated. */
@@ -140,60 +140,71 @@ object TableViews {
   }
 
   /** Replay one event stream across `cuts`, maintaining every registered
-    * view off one shared decode + merge per batch. Same micro-batch
-    * discipline as the other replay loops (child session, AQE off,
-    * batch-width shuffles, log pinned once). `maxEventsPerBatch` splits
-    * a backlog via [[MultiView.autoCuts]]. */
+    * view off one shared decode + merge per batch. The replay's own part
+    * is the micro-batch discipline (child session, AQE off, batch-width
+    * shuffles, log pinned once); the batches fold in [[fold]], the same
+    * kernel the table runner calls. `maxEventsPerBatch` splits a backlog
+    * via [[MultiView.autoCuts]]. */
   def replay(events: DataFrame, cuts: Seq[Long], pk: Seq[String],
              maintainers: Seq[Maintainer[_]],
              batchShufflePartitions: Int = 8,
              maxLocalKeys: Int = JoinView.DefaultMaxLocalKeys,
              maxEventsPerBatch: Option[Int] = None): Result = {
-    require(maintainers.nonEmpty, "at least one maintainer")
-    // results are keyed by maintainer IDENTITY — a repeated instance
-    // would collapse to one entry and silently drop a registration
-    require(maintainers.distinct.size == maintainers.size,
-      "each maintainer must be a distinct instance (results are keyed " +
-        "by identity); build a second instance for a second view")
+    requireRegistration(maintainers)
     val parent = events.sparkSession
-    val batchWidth =
-      MultiView.resolveBatchWidth(parent, batchShufflePartitions)
-    val child = parent.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.shuffle.partitions", batchWidth.toString)
-    def inChild(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.reRoot(df, child)
-    def emptyInChild(df: DataFrame): DataFrame =
-      child.createDataFrame(child.sparkContext.emptyRDD[Row], df.schema)
-    val events0 = emptyInChild(events.limit(0))
-    val stateSchema = emptyInChild(Materializer.compact(events.limit(0), pk))
+    val child = MultiView.batchSession(parent, batchShufflePartitions)
+    val events0 = MultiView.emptyIn(child, events.limit(0))
     val ms = maintainers.map(_.asInstanceOf[Maintainer[Any]])
-    var states: Seq[Any] = ms.map(_.empty(events0, pk))
-    val pinned = inChild(Materializer.pinnedEvents(events))
-      .coalesce(batchWidth)
-    val allCuts = maxEventsPerBatch match {
-      case Some(m) => (cuts ++ MultiView.autoCuts(pinned, m)).distinct.sorted
-      case None => cuts
-    }
-    def slice(lo: Long, hi: Long) =
-      pinned.filter(col("ts") > lo && col("ts") <= hi)
-    val windows = (Long.MinValue +: allCuts) :+ Long.MaxValue
-    val bounds = windows.sliding(2).map { case Seq(lo, hi) => (lo, hi) }.toSeq
-    var st = stateSchema
-    stepConcurrently(ms.size, Some(child)) { parSteps =>
-      bounds.foreach { case (lo, hi) =>
-        val (ctx, next) = batchCtx(st, slice(lo, hi), pk, maxLocalKeys)
-        states = parSteps(ms.zip(states).map { case (m, s) =>
-          () => m.pin(m.step(s, ctx)): Any
-        })
-        st = next
-      }
-    }
+    val pinned = MultiView.pinnedIn(child, events)
+    val allCuts = maxEventsPerBatch.fold(cuts)(m =>
+      (cuts ++ MultiView.autoCuts(pinned, m)).distinct.sorted)
+    val (st, states) = fold(
+      MultiView.emptyIn(child, Materializer.compact(events.limit(0), pk)),
+      ms, ms.map(_.empty(events0, pk)), pinned, allCuts, pk, maxLocalKeys,
+      child)
     import org.apache.spark.sql.graft.bridge.reRoot
     new Result(reRoot(st, parent),
       maintainers.zip(states).map { case (m, s) =>
         (m: Maintainer[_]) -> m.asInstanceOf[Maintainer[Any]].reRoot(s, parent)
       }.toMap)
+  }
+
+  /** A replay's maintainers: at least one, each a distinct instance —
+    * results are keyed by maintainer IDENTITY, so a repeated instance
+    * would collapse to one entry and silently drop a registration. */
+  private[cdc] def requireRegistration(maintainers: Seq[AnyRef]): Unit = {
+    require(maintainers.nonEmpty, "at least one maintainer")
+    require(maintainers.distinct.size == maintainers.size,
+      "each maintainer must be a distinct instance (results are keyed " +
+        "by identity); build a second instance for a second view")
+  }
+
+  /** THE table fold kernel — the only per-batch window loop over one
+    * table, shared by [[replay]], the table runner
+    * ([[graft.streaming.CdcStream.maintainTableViewsToParquet]]) and its
+    * snapshot seed. Folds `delta` window by window (`(lo, hi]` between
+    * consecutive `cuts`, open at both ends): one shared [[batchCtx]] per
+    * window, then every maintainer's step, run concurrently
+    * ([[stepConcurrently]]) with `session` active on the step threads.
+    * `states` are the maintainers' states, index-aligned with `ms`.
+    * Returns the merged table state and the new maintainer states. */
+  private[graft] def fold(state: DataFrame, ms: Seq[Maintainer[Any]],
+      states: Seq[Any], delta: DataFrame, cuts: Seq[Long], pk: Seq[String],
+      maxLocalKeys: Int, session: SparkSession): (DataFrame, Seq[Any]) = {
+    val windows = (Long.MinValue +: cuts) :+ Long.MaxValue
+    var st = state
+    var vs = states
+    stepConcurrently(ms.size, Some(session)) { parSteps =>
+      windows.sliding(2).foreach { case Seq(lo, hi) =>
+        val (ctx, next) = batchCtx(st,
+          delta.filter(col("ts") > lo && col("ts") <= hi), pk, maxLocalKeys)
+        vs = parSteps(ms.zip(vs).map { case (m, s) =>
+          () => m.pin(m.step(s, ctx)): Any
+        })
+        st = next
+      }
+    }
+    (st, vs)
   }
 
   /** Run each replay batch's maintainer folds CONCURRENTLY: registered

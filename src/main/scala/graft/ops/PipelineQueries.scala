@@ -59,7 +59,7 @@ object PipelineQueries {
     * round). At sf0.1 the ~1.5k-node family graph resolves to the old
     * fixed 8; a 10× graph widens past it, and at 100 TB the cap hands
     * the loop whatever width the cluster was configured with. The conf
-    * read is Try-wrapped (resolveBatchWidth discipline): a non-numeric
+    * read is Try-wrapped (MultiView.batchSession discipline): a non-numeric
     * platform value must not turn the clustering queries into a
     * query-time NumberFormatException. */
   private[graft] def ccWidth(nodeCount: Long, s: SparkSession): Int =

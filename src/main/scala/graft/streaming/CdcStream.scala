@@ -848,17 +848,18 @@ object CdcStream {
   /** Maintain N views of `L ⋈ R` from ONE two-topic changelog stream —
     * the streaming face of [[graft.cdc.MultiView.replay]] and the full
     * reference fan-out (`cdc_manager.go:277-298`: one decoded stream, N
-    * registered handlers). Per batch: decode ONCE, derive the changed-key
-    * sets ONCE, merge the L/R states ONCE, then fold every registered
-    * view's delta step off the same [[graft.cdc.MultiView.BatchCtx]];
-    * emit each view's own changelog; persist everything — both table
-    * states plus every view's state and face — as ONE generation with a
-    * single atomic swap, so the whole view family advances (and
-    * crash-recovers) together. Exactly-once via the applied-batch
-    * marker. The join shape (`lJoinCols` against R's primary key) is
-    * checked before the stream starts.
-    *
-    * `maxEventsPerBatch` auto-cuts an oversized micro-batch into
+    * registered handlers). The pair is the two-table chain: it runs the
+    * chain runner of [[maintainSnowflakeViewToParquet]] (L = table 0,
+    * R = table 1), persisting the table states as `left`/`right`. Per
+    * batch: decode ONCE, derive the changed-key sets ONCE, merge the L/R
+    * states ONCE, then fold every registered view's delta step off the
+    * same [[graft.cdc.MultiView.BatchCtx]]; emit each view's own
+    * changelog; persist everything — both table states plus every view's
+    * state and face — as ONE generation with a single atomic swap, so
+    * the whole view family advances (and crash-recovers) together.
+    * Exactly-once via the applied-batch marker. The join shape
+    * (`lJoinCols` against R's primary key) is checked before the stream
+    * starts. `maxEventsPerBatch` auto-cuts an oversized micro-batch into
     * event-count-bounded sub-batches inside the foreachBatch body (see
     * [[maintainTableViewsToParquet]]'s rationale — same swap/marker/
     * changelog semantics). */
@@ -869,93 +870,10 @@ object CdcStream {
                                  maxEventsPerBatch: Option[Int] = None,
                                  retention: Option[(Int, Int)] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.MultiView
-    require(views.nonEmpty, "at least one view")
-    require(views.map(_.name).distinct.size == views.size,
-      s"view names must be distinct: ${views.map(_.name).mkString(", ")}")
-    val lPk = lSpec.primaryKey
-    val rPk = rSpec.primaryKey
-    MultiView.requireJoinShape(rPk, lJoinCols)
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = liveViewGeneration(spark, rootPath,
-                                      "maintainMultiViewToParquet")
-        // emitted changes are not replay-idempotent — marker gates all
-        if (!root.exists(r => isApplied(spark, r, batchId))) {
-          // LAZY pins: the first action over the deltas materializes
-          // them. With auto-cuts on, that first action IS the autoCuts
-          // count — a small batch pays ONE probe job total instead of an
-          // eager-pin job per side plus a separate count; everything
-          // downstream then reads the pinned RDDs.
-          val dl = changeEvents(batch, lSpec).localCheckpoint(false)
-          val dr = changeEvents(batch, rSpec).localCheckpoint(false)
-          val (stL, stR) = root
-            .map { r =>
-              val pair = (spark.read.parquet(s"$r/left"),
-                          spark.read.parquet(s"$r/right"))
-              refuseStateDrift(pair._1, dl, lSpec,
-                               "maintainMultiViewToParquet", rootPath)
-              refuseStateDrift(pair._2, dr, rSpec,
-                               "maintainMultiViewToParquet", rootPath)
-              pair
-            }
-            .getOrElse(
-              (emptyLike(Materializer.compact(dl.limit(0), lPk)),
-               emptyLike(Materializer.compact(dr.limit(0), rPk))))
-          val liveL0 = emptyLike(stL.limit(0).drop(Materializer.MetaCols: _*))
-          val liveR0 = emptyLike(stR.limit(0).drop(Materializer.MetaCols: _*))
-          val vs = views.map(_.asInstanceOf[NamedView[Any]])
-          val st0s: Seq[Any] = vs.map { v =>
-            root match {
-              case Some(r) =>
-                v.load(readViewFiles(spark, r, v.name, v.fileNames))
-              case None =>
-                v.maintainer.empty(liveL0, liveR0, lPk, rPk, lJoinCols)
-            }
-          }
-          // THE shared work per (sub-)batch: one key derivation, one
-          // L/R merge. A backlog batch is auto-cut into ts windows so
-          // each sub-batch keeps the broadcast delta path.
-          // BOOTSTRAP FAST PATH: a FROM-EMPTY backlog (no prior
-          // generation) is semantically a one-shot build — stepwise ==
-          // from-scratch == one-batch is the spec'd invariant — so the
-          // auto-cuts' per-sub-batch driver round-trips are pure
-          // overhead there; an over-cap key set degrades to the spec'd
-          // distributed fallback, which IS the right plan for a
-          // corpus-sized first batch. Cuts re-engage from the second
-          // batch on (root exists), the steady-state incremental shape.
-          val subCuts = maxEventsPerBatch
-            .filter(_ => root.nonEmpty)
-            .map(m => MultiView.autoCuts(dl, dr, m))
-            .getOrElse(Seq.empty)
-          val subWindows = (Long.MinValue +: subCuts) :+ Long.MaxValue
-          var (lCur, rCur) = (stL, stR)
-          var vCur = st0s
-          subWindows.sliding(2).foreach { case Seq(lo, hi) =>
-            def sliced(d: DataFrame) =
-              d.filter(col("ts") > lo && col("ts") <= hi)
-            val (ctx, lN, rN) = MultiView.batchCtx(lCur, rCur,
-              sliced(dl), sliced(dr), lPk, rPk, lJoinCols, keys = None,
-              maxLocalKeys = graft.cdc.JoinView.DefaultMaxLocalKeys)
-            vCur = vs.zip(vCur).map { case (v, s) =>
-              v.maintainer.pin(v.maintainer.step(s, ctx)) }
-            lCur = lN
-            rCur = rN
-          }
-          commitViews(spark, rootPath, root, batchId,
-            vs.zip(vCur).map { case (v, s) => v.commit(s) }, retention) {
-            tmp =>
-              lCur.write.mode("overwrite").parquet(s"$tmp/left")
-              rCur.write.mode("overwrite").parquet(s"$tmp/right")
-          }
-        }
-        ()
-      }
-      .start()
+    graft.cdc.MultiView.requireJoinShape(rSpec.primaryKey, lJoinCols)
+    maintainChainToParquet(envelope, Seq(lSpec, rSpec), Seq(lJoinCols),
+      views, rootPath, checkpointPath, maxEventsPerBatch, retention,
+      "maintainMultiViewToParquet", Seq("left", "right"))
   }
 
   /** Read a [[maintainMultiViewToParquet]] view's face by name,
@@ -981,17 +899,18 @@ object CdcStream {
 
   /** Maintain N views of a SNOWFLAKE CHAIN `T₁ ⋈ T₂ ⋈ … ⋈ Tₙ` from ONE
     * N-topic changelog stream — the streaming face of
-    * [[graft.cdc.SnowflakeView.replay]]. Per batch: decode each topic
-    * ONCE, run one shared [[graft.cdc.SnowflakeView.chainStep]] (N key
-    * derivations + N state merges + the bottom-up effective-key cascade
-    * and intermediate chain-view steps), then fold every registered view
-    * off the same two-sided top ctx; emit each view's own changelog;
+    * [[graft.cdc.SnowflakeView.replay]], folding in the same kernel
+    * ([[graft.cdc.SnowflakeView.fold]]). Per batch: decode each topic
+    * ONCE, run one shared [[graft.cdc.SnowflakeView.chainStep]] per
+    * window (N key derivations + N state merges + the bottom-up
+    * effective-key cascade and intermediate chain-view steps), then fold
+    * every registered view off the same two-sided top ctx; emit each view's own changelog;
     * persist the N table states, the n−2 intermediate chain views, and
     * every view's state + face as ONE generation with a single atomic
     * swap — the whole family advances (and crash-recovers) together.
     * Exactly-once via the applied-batch marker; `maxEventsPerBatch`
     * auto-cuts an oversized catch-up batch into event-count-bounded
-    * sub-batches (same rationale as [[maintainMultiViewToParquet]]).
+    * sub-batches (same rationale as [[maintainTableViewsToParquet]]).
     * `specs` are ordered fact-first (deepest dimension last); `fks(i)`
     * is table i's foreign key into `specs(i+1)`'s primary key.
     * Maintainers see `L = T₁, R = T₂⋈…⋈Tₙ`, so the same [[NamedView]]
@@ -1004,33 +923,54 @@ object CdcStream {
                                      maxEventsPerBatch: Option[Int] = None,
                                      retention: Option[(Int, Int)] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    graft.cdc.SnowflakeView.requireChain(specs.size,
+                                         specs.map(_.primaryKey), fks)
+    maintainChainToParquet(envelope, specs, fks, views, rootPath,
+      checkpointPath, maxEventsPerBatch, retention,
+      "maintainSnowflakeViewToParquet", specs.indices.map(t => s"table_$t"))
+  }
+
+  /** The chain runner both join entries share: per streaming batch,
+    * restore the table states (files `tableFiles`, refusing a state
+    * written under another spec), the intermediate chain views
+    * (`chain_<k>`) and every view's state from the live generation — or
+    * start from empty — then fold the batch in
+    * [[graft.cdc.SnowflakeView.fold]] and commit it ([[commitViews]]).
+    * `surface` names the public entry in refusals. The entries check
+    * the join shape; this body checks only the registration. */
+  private def maintainChainToParquet(envelope: DataFrame,
+      specs: Seq[TableSpec], fks: Seq[Seq[String]], views: Seq[NamedView[_]],
+      rootPath: String, checkpointPath: String,
+      maxEventsPerBatch: Option[Int], retention: Option[(Int, Int)],
+      surface: String, tableFiles: Seq[String])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.cdc.{MultiView, SnowflakeView}
-    val n = specs.size
-    val pks = specs.map(_.primaryKey)
-    SnowflakeView.requireChain(n, pks, fks)
     require(views.nonEmpty, "at least one view")
     require(views.map(_.name).distinct.size == views.size,
       s"view names must be distinct: ${views.map(_.name).mkString(", ")}")
+    val n = specs.size
+    val pks = specs.map(_.primaryKey)
     envelope.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val root = liveViewGeneration(spark, rootPath,
-                                      "maintainSnowflakeViewToParquet")
+        val root = liveViewGeneration(spark, rootPath, surface)
+        // emitted changes are not replay-idempotent — marker gates all
         if (!root.exists(r => isApplied(spark, r, batchId))) {
-          // lazy pins: with auto-cuts on, the probe count is the action
-          // that materializes the deltas (multi-view face rationale)
+          // LAZY pins: the first action over the deltas materializes
+          // them. With auto-cuts on, that first action IS the autoCuts
+          // count — a small batch pays ONE probe job total instead of an
+          // eager-pin job per side plus a separate count; everything
+          // downstream then reads the pinned RDDs.
           val deltas = specs.map(sp =>
             changeEvents(batch, sp).localCheckpoint(false))
           val states0: Seq[DataFrame] = root match {
             case Some(r) =>
               (0 until n).map { t =>
-                val st = spark.read.parquet(s"$r/table_$t")
-                refuseStateDrift(st, deltas(t), specs(t),
-                                 "maintainSnowflakeViewToParquet",
-                                 rootPath)
+                val st = spark.read.parquet(s"$r/${tableFiles(t)}")
+                refuseStateDrift(st, deltas(t), specs(t), surface, rootPath)
                 st
               }
             case None => deltas.zip(pks).map { case (d, pk) =>
@@ -1038,55 +978,37 @@ object CdcStream {
           }
           val live0 = states0.map(st =>
             emptyLike(st.limit(0).drop(Materializer.MetaCols: _*)))
-          def joinCondFor(k: Int) = fks(k).zip(pks(k + 1))
-            .map { case (l, r) => col(l) === col(r) }.reduce(_ && _)
-          val chain0 = new Array[DataFrame](n)
-          chain0(n - 1) = live0(n - 1)
-          for (k <- n - 2 to 0 by -1)
-            chain0(k) = emptyLike(
-              live0(k).join(chain0(k + 1), joinCondFor(k)).limit(0))
+          val chain0 = SnowflakeView.emptyChain(live0, pks, fks)
           val vPre0: Seq[DataFrame] = root match {
             case Some(r) =>
               (1 to n - 2).map(k => spark.read.parquet(s"$r/chain_$k"))
-            case None => (1 to n - 2).map(chain0)
+            case None => chain0.init
           }
           val vs = views.map(_.asInstanceOf[NamedView[Any]])
           val st0s: Seq[Any] = vs.map { v =>
             root match {
               case Some(r) =>
                 v.load(readViewFiles(spark, r, v.name, v.fileNames))
-              case None => v.maintainer.empty(live0(0), chain0(1),
+              case None => v.maintainer.empty(live0(0), chain0.head,
                                               pks(0), pks(1), fks(0))
             }
           }
           // from-empty bootstrap folds as ONE window (see
-          // maintainMultiViewToParquet's rationale)
+          // maintainTableViewsToParquet's rationale)
           val subCuts = maxEventsPerBatch
             .filter(_ => root.nonEmpty)
             .map(m => MultiView.autoCuts(
               deltas.map(_.select(col("ts"))).reduce(_ unionByName _), m))
             .getOrElse(Seq.empty)
-          val subWindows = (Long.MinValue +: subCuts) :+ Long.MaxValue
-          var stCur = states0
-          var vpCur = vPre0
-          var vCur = st0s
-          subWindows.sliding(2).foreach { case Seq(lo, hi) =>
-            val sliced = deltas.map(
-              _.filter(col("ts") > lo && col("ts") <= hi))
-            val (merged, vPost, ctx0) = SnowflakeView.chainStep(
-              stCur, vpCur, sliced, pks, fks, keys = None,
-              maxLocalKeys = graft.cdc.JoinView.DefaultMaxLocalKeys)
-            vCur = vs.zip(vCur).map { case (v, s) =>
-              v.maintainer.pin(v.maintainer.step(s, ctx0)) }
-            stCur = merged
-            vpCur = vPost
-          }
+          val (tables, chain, vCur) = SnowflakeView.fold(states0, vPre0,
+            vs.map(_.maintainer), st0s, deltas, subCuts, pks, fks,
+            graft.cdc.JoinView.DefaultMaxLocalKeys, spark)
           commitViews(spark, rootPath, root, batchId,
             vs.zip(vCur).map { case (v, s) => v.commit(s) }, retention) {
             tmp =>
-              stCur.zipWithIndex.foreach { case (st, t) =>
-                st.write.mode("overwrite").parquet(s"$tmp/table_$t") }
-              vpCur.zipWithIndex.foreach { case (vp, i) =>
+              tables.zip(tableFiles).foreach { case (st, f) =>
+                st.write.mode("overwrite").parquet(s"$tmp/$f") }
+              chain.zipWithIndex.foreach { case (vp, i) =>
                 vp.write.mode("overwrite").parquet(s"$tmp/chain_${i + 1}") }
           }
         }
@@ -1544,9 +1466,11 @@ object CdcStream {
     * streaming face of [[graft.cdc.TableViews.replay]] and the literal
     * reference fan-out (`cdc_manager.go:277-298`: every handler
     * registered on a topic receives each decoded event). Per batch:
-    * decode ONCE, derive the changed-key set ONCE, merge the
-    * tombstone-aware state ONCE, fold every registered view off the same
-    * [[graft.cdc.TableViews.BatchCtx]], emit each view's own changelog,
+    * decode ONCE, then fold in the replay's own kernel
+    * ([[graft.cdc.TableViews.fold]]): per window derive the changed-key
+    * set ONCE, merge the tombstone-aware state ONCE, and step every
+    * registered view concurrently off the same
+    * [[graft.cdc.TableViews.BatchCtx]]; emit each view's own changelog,
     * and persist everything as ONE atomically-swapped generation with
     * the applied-batch marker (exactly-once fold application). */
   /** `maxEventsPerBatch` splits an oversized micro-batch (an
@@ -1674,7 +1598,7 @@ object CdcStream {
         // fold maintainers double-count on replay; marker gates the body
         if (!root.exists(r => isApplied(spark, r, batchId))) {
           // lazy pin — the autoCuts count (or the first fold action)
-          // materializes it; see maintainMultiViewToParquet's rationale
+          // materializes it; see maintainChainToParquet's rationale
           val deltaAll = changeEvents(batch, spec)
           val delta = seedTs.map(t => deltaAll.filter(col("ts") > t))
             .getOrElse(deltaAll).localCheckpoint(false)
@@ -1751,24 +1675,16 @@ object CdcStream {
           }
           // THE shared work per (sub-)batch: one key derivation, one
           // state merge. A backlog batch is auto-cut into ts windows so
-          // each sub-batch keeps the broadcast delta path.
-          // from-empty bootstrap folds as ONE window (see
-          // maintainMultiViewToParquet's rationale)
+          // each sub-batch keeps the broadcast delta path — except the
+          // from-empty bootstrap, which folds as ONE window (see the
+          // rationale above)
           val subCuts = maxEventsPerBatch
             .filter(_ => root.nonEmpty)
             .map(m => graft.cdc.MultiView.autoCuts(delta, m))
             .getOrElse(Seq.empty)
-          val subWindows = (Long.MinValue +: subCuts) :+ Long.MaxValue
-          var stCur = st0
-          var vCur = vst0s
-          subWindows.sliding(2).foreach { case Seq(lo, hi) =>
-            val d = delta.filter(col("ts") > lo && col("ts") <= hi)
-            val (ctx, stNext) = TableViews.batchCtx(stCur, d, pk,
-              graft.cdc.JoinView.DefaultMaxLocalKeys)
-            vCur = vs.zip(vCur).map { case (v, s) =>
-              v.maintainer.pin(v.maintainer.step(s, ctx)) }
-            stCur = stNext
-          }
+          val (stCur, vCur) = TableViews.fold(st0, vs.map(_.maintainer),
+            vst0s, delta, subCuts, pk,
+            graft.cdc.JoinView.DefaultMaxLocalKeys, spark)
           commitViews(spark, rootPath, root, batchId,
             vs.zip(vCur).map { case (v, s) => v.commit(s) }, retention) {
             tmp => stCur.write.mode("overwrite").parquet(s"$tmp/state")
@@ -1885,11 +1801,9 @@ object CdcStream {
     val st0 = emptyLike(Materializer.compact(events.limit(0), pk))
     val events0 = emptyLike(events.limit(0))
     val vs = views.map(_.asInstanceOf[NamedTableView[Any]])
-    val (ctx, stNext) = TableViews.batchCtx(st0, events, pk,
-      graft.cdc.JoinView.DefaultMaxLocalKeys)
-    val nexts = vs.map(v =>
-      v.maintainer.pin(v.maintainer.step(v.maintainer.empty(events0, pk),
-                                         ctx)))
+    val (stNext, nexts) = TableViews.fold(st0, vs.map(_.maintainer),
+      vs.map(_.maintainer.empty(events0, pk)), events, Seq.empty, pk,
+      graft.cdc.JoinView.DefaultMaxLocalKeys, spark)
     val faces = vs.zip(nexts).map { case (v, s) =>
       v.face(s).localCheckpoint() }
     val conf = spark.sparkContext.hadoopConfiguration
@@ -2443,19 +2357,21 @@ object CdcStream {
   }
 
   /** Health snapshot of a maintained-view root, for monitoring/lag
-    * dashboards. `appliedBatch` is the batch id recorded on the LIVE
-    * generation (-1 before the first marker); `viewRows` counts the
-    * persisted view file `viewFile` (a runner's face is
-    * `<name>__view`); `changesBatches` is the `[lo, hi]` batch-id range
-    * present in that view's changes log — `<rootPath>/<name>/changes`
-    * for a `<name>__view` face — (retention window — what
-    * [[viewAsOfBatch]] can still reconstruct and what a catching-up
+    * dashboards. `viewFile` names a runner's face, `<name>__view`;
+    * `appliedBatch` is the batch id recorded on the LIVE generation (-1
+    * before the first marker); `viewRows` counts that face;
+    * `changesBatches` is the `[lo, hi]` batch-id range present in the
+    * view's changes log `<rootPath>/<name>/changes` (retention window —
+    * what [[viewAsOfBatch]] can still reconstruct and what a catching-up
     * [[applyViewChangesToJdbc]] consumer can still drain). */
   final case class ViewStats(appliedBatch: Long, viewRows: Long,
                              changesBatches: Option[(Long, Long)])
 
   def viewStats(spark: SparkSession, rootPath: String,
-                viewFile: String = "view"): ViewStats = {
+                viewFile: String): ViewStats = {
+    require(viewFile.endsWith("__view"),
+      s"viewStats: '$viewFile' is not a runner face — a view runner " +
+        s"persists view <name> as the file '<name>__view'")
     val root = liveGenerationRoot(spark, s"$rootPath/current")
       .getOrElse(throw new IllegalStateException(s"no state at $rootPath"))
     val dir = new org.apache.hadoop.fs.Path(root)
@@ -2468,11 +2384,8 @@ object CdcStream {
     val rows = spark.read.parquet(s"$root/$viewFile").count()
     // committed dirs only — a torn batch a concurrent producer is
     // writing is not yet part of the drainable/reconstructable window
-    val changesRoot =
-      if (viewFile.endsWith("__view"))
-        s"$rootPath/${viewFile.stripSuffix("__view")}"
-      else rootPath
-    val ids = committedBatchIds(spark, changesRoot)
+    val ids = committedBatchIds(spark,
+      s"$rootPath/${viewFile.stripSuffix("__view")}")
     val batches = if (ids.isEmpty) None else Some((ids.min, ids.max))
     ViewStats(applied, rows, batches)
   }
@@ -2752,14 +2665,7 @@ object CdcStream {
       .select(col("window.start").as("ws"), col(keyCol), col("n"),
               col("sum_value"))
 
-  /** Sliding + session window variants. */
-  def slidingCounts(events: DataFrame, tsCol: String, watermark: String,
-                    window_ : String, slide: String, keyCol: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_, slide), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("ws"), col(keyCol), col("n"))
-
+  /** Session window variant. */
   def sessionCounts(events: DataFrame, tsCol: String, watermark: String,
                     gap: String, keyCol: String): DataFrame =
     events.withWatermark(tsCol, watermark)

@@ -127,9 +127,9 @@ class LeftJoinViewSpec extends SparkSpec {
     val emptyL = Materializer.compact(l.limit(0), Seq("k"))
     val emptyR = Materializer.compact(r.limit(0), Seq("ck"))
     // one step: the shared batch ctx plus this maintainer's fold
-    val (ctx, _, _) = MultiView.batchCtx(emptyL, emptyR, l, r, Seq("k"),
-      Seq("ck"), Seq("fk"), keys = None,
-      maxLocalKeys = JoinView.DefaultMaxLocalKeys)
+    val (_, _, ctx) = SnowflakeView.chainStep(Seq(emptyL, emptyR),
+      Seq.empty, Seq(l, r), Seq(Seq("k"), Seq("ck")), Seq(Seq("fk")),
+      keys = None, maxLocalKeys = JoinView.DefaultMaxLocalKeys)
     val st = LeftJoinView.maintainer(viewCols).step(
       LeftJoinView.directView(
         emptyL.drop(Materializer.MetaCols: _*),

@@ -96,7 +96,7 @@ class MaterializerSpec extends SparkSpec {
       .select(col("op"), col("ts"), col("seq"),
         struct(col("key"), col("value")).as("after"))
     val state = Materializer.compact(toDf(ops), Seq("key")).localCheckpoint()
-    // pre-collected LocalRelation keys, as MultiView.batchCtx passes them
+    // pre-collected LocalRelation keys, as SnowflakeView.chainStep passes them
     // (otherwise the key-distinct adds its own — |Δ|-bounded — exchanges)
     val ck = spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row(7L),
@@ -135,9 +135,9 @@ class MaterializerSpec extends SparkSpec {
       .join(emptyR.drop(Materializer.MetaCols: _*), col("fk") === col("ck"))
       .select(viewCols.map(col): _*)
     // one step: the shared batch ctx plus the join view's fold
-    val (ctx, _, _) = MultiView.batchCtx(emptyL, emptyR, l, r, Seq("k"),
-      Seq("ck"), Seq("fk"), keys = None,
-      maxLocalKeys = JoinView.DefaultMaxLocalKeys)
+    val (_, _, ctx) = SnowflakeView.chainStep(Seq(emptyL, emptyR),
+      Seq.empty, Seq(l, r), Seq(Seq("k"), Seq("ck")), Seq(Seq("fk")),
+      keys = None, maxLocalKeys = JoinView.DefaultMaxLocalKeys)
     val view = JoinView.maintainer(viewCols).step(emptyView, ctx)
     val plan = view.queryExecution.executedPlan.toString
     // keep is anti-joined against broadcast key sets and both rebuild

@@ -74,9 +74,9 @@ class SkewOverCapSpec extends SparkSpec {
       .join(stR.drop(Materializer.MetaCols: _*), col("fk") === col("ck"))
       .select(viewCols.map(col): _*).limit(0)
     // keys = (None, None): both sides over-cap -> distributed fallback
-    val (ctx, _, _) = MultiView.batchCtx(stL, stR, l, r,
-      Seq("k"), Seq("ck"), Seq("fk"), keys = Some((None, None)),
-      maxLocalKeys = 1)
+    val (_, _, ctx) = SnowflakeView.chainStep(Seq(stL, stR), Seq.empty,
+      Seq(l, r), Seq(Seq("k"), Seq("ck")), Seq(Seq("fk")),
+      keys = Some(Seq(None, None)), maxLocalKeys = 1)
     val plan = JoinView.stepView(view, ctx, viewCols)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("__gsaltl") && plan.contains("__gsaltr"),

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
-import graft.cdc.{Materializer, MultiView}
+import graft.cdc.{Materializer, MultiView, SnowflakeView}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -105,7 +105,7 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
 
   // The replay depends only on the corpus size, so each is built once
   // per suite and shared by every probe: `step` returns a NEW state and
-  // `batchCtx` new merged states, so the probes stay independent.
+  // `chainStep` new merged states, so the probes stay independent.
   private lazy val replayed1x = replay(5000L)
   private lazy val replayed10x = replay(50000L)
 
@@ -125,11 +125,12 @@ class DecontamStressSpec extends SparkSpec with graft.ShuffleProbe {
       if (probeDocs) (docProbe(), benchProbe().limit(0))
       else (docProbe().limit(0), benchProbe())
     val keys =
-      if (gramOverCap) Some((Some(Seq.empty[Long].toDF("doc_id")), None))
+      if (gramOverCap) Some(Seq(Some(Seq.empty[Long].toDF("doc_id")), None))
       else None
     val shuffled = shuffleRecordsDuring {
-      val (ctx, lN, rN) = MultiView.batchCtx(res.left, res.right, dl, bl,
-        Seq("doc_id"), Seq("b_id"), Seq("doc_id"), keys = keys,
+      val (Seq(lN, rN), _, ctx) = SnowflakeView.chainStep(
+        Seq(res.left, res.right), Seq.empty, Seq(dl, bl),
+        Seq(Seq("doc_id"), Seq("b_id")), Seq(Seq("doc_id")), keys = keys,
         maxLocalKeys = if (gramOverCap) 1 else 100000)
       val st2 = m.step(st, ctx)
       lN.count(); rN.count()

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
-import graft.cdc.{ChangelogGen, Materializer, MultiView}
+import graft.cdc.{ChangelogGen, Materializer, MultiView, SnowflakeView}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -126,9 +126,9 @@ class DecontamViewSpec extends SparkSpec {
     val stL = Materializer.compact(dl.limit(0), Seq("doc_id"))
     val stR = Materializer.compact(bl.limit(0), Seq("b_id"))
     // keys = (None, None): both sides over-cap -> distributed fallback
-    val (ctx, _, _) = MultiView.batchCtx(stL, stR, dl, bl,
-      Seq("doc_id"), Seq("b_id"), Seq("doc_id"),
-      keys = Some((None, None)), maxLocalKeys = 1)
+    val (_, _, ctx) = SnowflakeView.chainStep(Seq(stL, stR), Seq.empty,
+      Seq(dl, bl), Seq(Seq("doc_id"), Seq("b_id")), Seq(Seq("doc_id")),
+      keys = Some(Seq(None, None)), maxLocalKeys = 1)
     val st1 = m.step(
       m.empty(stL.drop(Materializer.MetaCols: _*).limit(0),
               stR.drop(Materializer.MetaCols: _*).limit(0),
@@ -159,8 +159,9 @@ class DecontamViewSpec extends SparkSpec {
     val release = benchEvents(Seq(
       ("insert", 99L, 10L, 50L, s"$fillA $G1"),
       ("insert", 99L, 11L, 51L, s"$fillB $G2")))
-    val (ctx, lNext, rNext) = MultiView.batchCtx(res0.left, res0.right,
-      dl.limit(0), release, Seq("doc_id"), Seq("b_id"), Seq("doc_id"),
+    val (Seq(lNext, rNext), _, ctx) = SnowflakeView.chainStep(
+      Seq(res0.left, res0.right), Seq.empty, Seq(dl.limit(0), release),
+      Seq(Seq("doc_id"), Seq("b_id")), Seq(Seq("doc_id")),
       keys = None, maxLocalKeys = 8)
     assert(ctx.rLocal, "probe premise: bench KEYS must stay under-cap")
     val m = DecontamView.maintainer("text", "text")

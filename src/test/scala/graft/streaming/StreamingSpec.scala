@@ -3009,4 +3009,12 @@ class StreamingSpec extends SparkSpec {
              msg.contains("[agg]") && msg.contains("Rebuild") &&
              msg.contains("checkpoint"), msg)
   }
+
+  test("viewStats refuses a view file that is not a runner face") {
+    val ex = intercept[IllegalArgumentException] {
+      CdcStream.viewStats(spark, tmpDir("vsroot"), "view")
+    }
+    assert(ex.getMessage.contains("'view'") &&
+             ex.getMessage.contains("<name>__view"), ex.getMessage)
+  }
 }
